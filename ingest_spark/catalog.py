@@ -124,8 +124,10 @@ _SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 def _local_stamp(path: str):
     """(name, size, mtime_ns) for a LOCAL parquet table — one entry
     for a single-file table (the driver's testdata layout), one per
-    part file for a directory table — or None when the path is remote
-    (hdfs://, s3://) or missing; callers then skip the cache."""
+    file for a directory table, at any depth (a hive-partitioned
+    table's leaves sit in subdirectories; names are relative to the
+    table) — or None when the path is remote (hdfs://, s3://) or
+    missing; callers then skip the cache."""
     if "://" in path:
         return None
     try:
@@ -134,13 +136,13 @@ def _local_stamp(path: str):
 
         if not stat_mod.S_ISDIR(st.st_mode):
             return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-        with os.scandir(path) as entries:
-            return tuple(
-                sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in entries
-                )
-            )
+        stamp = []
+        for dirpath, _dirs, files in os.walk(path):
+            for fn in files:
+                full = os.path.join(dirpath, fn)
+                fst = os.stat(full)
+                stamp.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(stamp))
     except OSError:
         return None
 

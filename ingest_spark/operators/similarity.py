@@ -79,10 +79,28 @@ def _quoted_name(name: str) -> str:
     separators (``a.vec`` -> ```a`.`vec```), so qualified names resolve
     exactly as the pre-r15 F.col path did instead of failing
     UNRESOLVED_COLUMN on a single over-quoted identifier (ADVICE
-    r15)."""
-    return ".".join(
-        "`" + part.replace("`", "``") + "`" for part in name.split(".")
-    )
+    r15). A backticked part keeps its dots and its doubled backticks
+    (```a.b`.vec`` -> ```a.b`.`vec```), as Spark's attribute-name
+    parser reads it."""
+    parts, cur, quoted, i = [], [], False, 0
+    while i < len(name):
+        ch = name[i]
+        if ch == "`":
+            if quoted and name[i + 1 : i + 2] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                quoted = not quoted
+        elif ch == "." and not quoted:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if quoted:
+        raise ValueError(f"unbalanced backticks in column name {name!r}")
+    parts.append("".join(cur))
+    return ".".join("`" + part.replace("`", "``") + "`" for part in parts)
 
 
 def hyperplane_planes(num_bits: int = 16, dim: int = 64, seed: int = 11) -> list[list[float]]:

@@ -19,15 +19,19 @@ serialize/deserialize path:
   plain dicts (used by tests for byte-parity against the Apache Avro
   JAVA implementation that ships inside Spark's JVM — the oracle);
 - distributed: ``encode_df`` / ``decode_df`` run the codec over
-  Arrow batches via ``mapInPandas`` (binary column in/out), with
+  Arrow batches via ``mapInArrow`` (binary column in/out), with
   optional Confluent wire framing (magic 0x00 + big-endian schema
   id) matching the reference producer's AvroSerializer output
   (fetch_data_energinet.py:240-244) and the reader-side header strip
   in ``schemas.avsc.strip_confluent_header``.
 
 At 100 TB this path is the interop/edge format — parquet remains the
-at-rest analytics format; the codec's per-batch Python cost sits only
-on Kafka-facing encode/decode, the same place the reference pays it.
+at-rest analytics format; the codec's Python cost sits only on
+Kafka-facing encode/decode, the same place the reference pays it.
+That cost is one walk of the parsed field types per row:
+``encode_df``/``decode_df`` parse the schema once per call (not once
+per row) and read each Arrow batch column-wise with ``to_pylist``, so
+no pandas row object or dtype conversion sits in the loop.
 """
 
 from __future__ import annotations
@@ -279,11 +283,15 @@ def _encode_value(buf: bytearray, t: Any, v: Any, path: str) -> None:
         # non-null one. Exact runtime-type match first; fall back to
         # first non-null branch for cross-typed numerics (int value
         # into a ["null","double"] contract — the pre-r13 behavior the
-        # reference contracts rely on).
-        matches = [i for i, x in enumerate(t) if x != "null" and _value_matches(x, v)]
-        branch = matches[0] if matches else next(
-            i for i, x in enumerate(t) if x != "null"
-        )
+        # reference contracts rely on). A [null, T] union has one
+        # non-null branch, so both rules pick it: skip the match.
+        if len(t) == 2 and "null" in t:
+            branch = 1 - t.index("null")
+        else:
+            matches = [i for i, x in enumerate(t) if x != "null" and _value_matches(x, v)]
+            branch = matches[0] if matches else next(
+                i for i, x in enumerate(t) if x != "null"
+            )
         _write_long(buf, branch)
         _encode_value(buf, t[branch], v, path)
         return
@@ -317,7 +325,9 @@ def _encode_value(buf: bytearray, t: Any, v: Any, path: str) -> None:
         if kind == "map":
             if v is not None and len(v):
                 _write_long(buf, len(v))
-                for k, mv in v.items():
+                # a dict, or Arrow's to_pylist form of a map cell: a
+                # list of (key, value) pairs
+                for k, mv in v.items() if isinstance(v, dict) else v:
                     _encode_value(buf, "string", k, f"{path}<key>")
                     _encode_value(buf, t["values"], mv, f"{path}[{k}]")
             _write_long(buf, 0)
@@ -824,7 +834,11 @@ def _align_col(df: DataFrame, name: str, target: T.DataType):
 
 def encode_record(schema: dict | str, record: dict) -> bytes:
     """One dict -> Avro binary body (no framing)."""
-    s = _parse(schema)
+    return _encode_body(_parse(schema), record)
+
+
+def _encode_body(s: dict, record: dict) -> bytes:
+    """``encode_record`` over an already ``_parse``d schema."""
     buf = bytearray()
     _encode_value(buf, {"type": "record", "fields": s["fields"]}, record, s.get("name", "record"))
     return bytes(buf)
@@ -841,13 +855,18 @@ def decode_record(
     shape — name-matched fields in any order, reader defaults for new
     fields, writer-only fields skipped, numeric/string promotions
     (the registry latest-version consumer case, T13)."""
-    s = _parse(schema)
+    r = _parse(reader_schema) if reader_schema is not None else None
+    return _decode_body(_parse(schema), data, r)
+
+
+def _decode_body(s: dict, data: bytes, r: dict | None = None) -> dict:
+    """``decode_record`` over already ``_parse``d writer (and reader)
+    schemas."""
     wt = {"type": "record", "fields": s["fields"]}
     name = s.get("name", "record")
-    if reader_schema is None:
+    if r is None:
         out, pos = _decode_value(data, 0, wt, name)
     else:
-        r = _parse(reader_schema)
         out, pos = _decode_resolved(
             data, 0, wt, {"type": "record", "fields": r["fields"]},
             r.get("name", name),
@@ -868,10 +887,17 @@ def encode_df(
 ) -> DataFrame:
     """Distributed encode: contract columns -> one ``value: binary``
     column (plus pass-through of any ``key`` column if present), via
-    mapInPandas over Arrow batches. ``schema_id`` adds Confluent
-    framing."""
+    mapInArrow. ``schema_id`` adds Confluent framing.
+
+    The schema is parsed once per call, and each Arrow batch is read
+    column by column (``to_pylist``), so cells reach the codec as plain
+    Python values with nulls as None: no pandas dtype sits in between
+    (a nullable long column holding a null would turn float64 there
+    and round every long above 2**53)."""
     s = _parse(schema)
     names = [f["name"] for f in s["fields"]]
+    rec_name = s.get("name", "record")
+    fields = [(f["type"], f"{rec_name}.{f['name']}") for f in s["fields"]]
     spark_schema = avsc_to_struct(s)
     missing = [n for n in names if n not in df.columns]
     if missing:
@@ -885,28 +911,27 @@ def encode_df(
         *(["key"] if has_key else []),
         *[_align_col(df, n, spark_schema[n].dataType) for n in names],
     )
+    prefix = b"" if schema_id is None else confluent_frame(b"", schema_id)
 
     def _enc(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
 
-        def _cell(v):
-            # pd.isna on a list/ndarray cell (avro array/map fields)
-            # returns an array — only null-out genuinely scalar NaN/None.
-            return None if (pd.api.types.is_scalar(v) and pd.isna(v)) else v
-
-        for pdf in batches:
-            values = [
-                encode_record(s, {n: _cell(row[n]) for n in names})
-                for _, row in pdf.iterrows()
-            ]
-            if schema_id is not None:
-                values = [confluent_frame(v, schema_id) for v in values]
-            out = {"value": values}
+        for batch in batches:
+            cols = [batch.column(n).to_pylist() for n in names]
+            values = []
+            # every field is a column, so the record walk of
+            # _encode_value reduces to the fields in order
+            for i in range(batch.num_rows):
+                buf = bytearray(prefix)
+                for (ft, path), col in zip(fields, cols):
+                    _encode_value(buf, ft, col[i], path)
+                values.append(bytes(buf))
+            arrays = [pa.array(values, type=pa.binary())]
             if has_key:
-                out = {"key": list(pdf["key"]), **out}
-            yield pd.DataFrame(out)
+                arrays.insert(0, batch.column("key").cast(pa.binary()))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.names)
 
-    return aligned.mapInPandas(_enc, out_schema)
+    return aligned.mapInArrow(_enc, out_schema)
 
 
 # ---------------------------------------- Object Container File (OCF)
@@ -950,7 +975,7 @@ def write_container(schema: dict | str, records: list[dict], codec: str = "null"
     if records:
         body = bytearray()
         for r in records:
-            body += encode_record(s, r)
+            body += _encode_body(s, r)
         _write_long(buf, len(records))
         _write_long(buf, len(body))
         buf += body
@@ -1068,24 +1093,27 @@ def decode_df(
     reader_schema: dict | str | None = None,
 ) -> DataFrame:
     """Distributed decode: ``value: binary`` -> typed contract columns
-    (mapInPandas). ``confluent=True`` strips the 5-byte header first —
-    the reader-side interop the reference consumer got wrong
-    (consumer.py:27-33 parsed wire-framed bytes as a container file).
+    (mapInArrow, schemas parsed once per call). ``confluent=True``
+    strips the 5-byte header first — the reader-side interop the
+    reference consumer got wrong (consumer.py:27-33 parsed
+    wire-framed bytes as a container file).
     ``reader_schema`` turns on spec schema resolution: payloads
     written under ``schema`` decode into the reader's (newer) shape,
     and the output columns/types are the READER's."""
     s = _parse(schema)
-    out_schema = _parse(reader_schema) if reader_schema is not None else s
+    r = _parse(reader_schema) if reader_schema is not None else None
+    out_schema = r if r is not None else s
     spark_schema = avsc_to_struct(out_schema)
     names = [f["name"] for f in out_schema["fields"]]
 
     def _dec(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        for pdf in batches:
-            rows = []
-            for raw in pdf[value_col]:
-                raw = bytes(raw)
+        arrow_schema = to_arrow_schema(spark_schema)
+        for batch in batches:
+            cols: list[list] = [[] for _ in names]
+            for raw in batch.column(value_col).to_pylist():
                 if confluent:
                     # Validated strip (mirrors avsc.strip_confluent_header):
                     # blind [5:] turns an unframed payload into confusing
@@ -1095,12 +1123,13 @@ def decode_df(
                             "not a Confluent-framed payload (expected magic "
                             f"0x00 + 4-byte schema id, got {raw[:5]!r})"
                         )
-                    body = raw[5:]
-                else:
-                    body = raw
-                rows.append(
-                    decode_record(s, body, reader_schema=reader_schema)
-                )
-            yield pd.DataFrame(rows, columns=names)
+                    raw = raw[5:]
+                rec = _decode_body(s, raw, r)
+                for col, n in zip(cols, names):
+                    col.append(rec[n])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
 
-    return df.mapInPandas(_dec, spark_schema)
+    return df.mapInArrow(_dec, spark_schema)

@@ -85,13 +85,22 @@ def write_stream_parquet(
 ) -> StreamingQuery:
     """K2: checkpointed columnar sink. ``partitionBy(ingest_date)``
     replaces the Connect DefaultPartitioner with date partitioning
-    (partition-pruned reads); file sizes are governed by trigger
-    cadence, not the reference's flush.size=3 small-file anti-pattern.
-    ``available_now`` processes the backlog then stops — the batch-like
-    trigger used by tests and backfills."""
+    (partition-pruned reads). With ``partition_date_col`` the stream is
+    also repartitioned by ``ingest_date`` before the sink, so a
+    micro-batch writes exactly one file per date it holds, and the
+    batch's write parallelism equals the number of distinct dates in
+    it. Without the repartition every task of the stateful operator
+    upstream would write its own file per date (one per state
+    partition x date, ~11 rows each on hourly settlement drops) — the
+    reference's flush.size=3 small-file anti-pattern in another guise.
+    A batch, and with it a file, is bounded by the source's
+    ``maxFilesPerTrigger`` (``read_file_stream``). ``available_now``
+    processes the backlog then stops — the batch-like trigger used by
+    tests and backfills."""
     out = df
     if partition_date_col is not None:
         out = out.withColumn("ingest_date", F.to_date(F.col(partition_date_col)))
+        out = out.repartition("ingest_date")
     writer = (
         out.writeStream.format("parquet")
         .option("path", path)
@@ -228,6 +237,9 @@ def foreach_batch_upsert(
     return apply
 
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
 def run_ingest_pipeline(
     spark: SparkSession,
     source_dir: str,
@@ -240,12 +252,31 @@ def run_ingest_pipeline(
     fmt: str = "json",
 ) -> StreamingQuery:
     """End-to-end S5->T5->T6->T9->K2 pipeline with availableNow
-    semantics (drain the backlog, then stop)."""
+    semantics (drain the backlog, then stop). Each micro-batch writes
+    one file per ``ingest_date`` it holds (``write_stream_parquet``).
+
+    The query runs without no-data micro-batches: the plan is
+    dedup-only in append mode, where a row is emitted the batch it is
+    first seen, so an empty batch after a drain would only evict state
+    past the advanced watermark. That eviction happens at the start of
+    the next data batch instead, with the same watermark, and the rows
+    written do not change. The setting is captured when the query
+    starts and the session's own value is restored right after, so
+    append-mode aggregations (``windowed_event_counts``), which need
+    the empty batch to emit finalized windows, are unaffected."""
     stream = read_file_stream(spark, source_dir, schema, fmt=fmt)
     cleaned = ingest_transform(stream, hash_cols, event_time_col, watermark)
-    return write_stream_parquet(
-        cleaned, sink_path, checkpoint, partition_date_col=event_time_col
-    )
+    prev = spark.conf.get(_NO_DATA_BATCHES, None)
+    spark.conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        return write_stream_parquet(
+            cleaned, sink_path, checkpoint, partition_date_col=event_time_col
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(_NO_DATA_BATCHES)
+        else:
+            spark.conf.set(_NO_DATA_BATCHES, prev)
 
 
 def windowed_event_counts(

@@ -5,7 +5,7 @@ JVM (avro-1.12.1.jar): for each contract we encode the same record
 with (a) the engine's pure-Python codec and (b) GenericDatumWriter +
 binaryEncoder via py4j, and require byte-for-byte equality. Decode is
 proven by round-trip plus decoding the JAVA-produced bytes with the
-Python codec. Distributed paths (encode_df/decode_df, mapInPandas)
+Python codec. Distributed paths (encode_df/decode_df, mapInArrow)
 and Confluent wire framing are exercised on real table data.
 """
 
@@ -1070,3 +1070,73 @@ def test_multibranch_union_struct_mapping():
         T.StructField("member0", T.IntegerType(), True),
         T.StructField("member1", T.StringType(), True),
     ])
+
+
+# ------------------------------------------- Arrow batches into the codec
+
+LONG_FLOAT = {
+    "type": "record",
+    "name": "LongFloat",
+    "fields": [
+        {"name": "n", "type": ["null", "long"]},
+        {"name": "x", "type": "float"},
+    ],
+}
+
+
+@pytest.mark.parametrize("with_null", [False, True], ids=["no_null", "null_in_batch"])
+def test_encode_df_keeps_longs_above_2_53(spark, with_null):
+    """2**60+1 in a (long, float) record survives encode_df and
+    decode_df exactly, also beside a null in the same column of the
+    same batch. Pandas rows upcast an all-numeric row to float64, and a
+    nullable long column holding a null to float64, both of which round
+    the value to 2**60."""
+    big = 2**60 + 1
+    rows = [(big, 1.5)] + ([(None, 2.5)] if with_null else [])
+    df = spark.createDataFrame(rows, "n long, x float").coalesce(1)
+    enc = encode_df(df, LONG_FLOAT)
+    got = sorted(bytes(r["value"]) for r in enc.collect())
+    assert got == sorted(encode_record(LONG_FLOAT, {"n": n, "x": x}) for n, x in rows)
+    back = decode_df(enc, LONG_FLOAT).collect()
+    assert sorted((r["n"] is None, r["n"] or 0, r["x"]) for r in back) == sorted(
+        (n is None, n or 0, x) for n, x in rows
+    )
+
+
+WITH_MAPS = {
+    "type": "record",
+    "name": "WithMaps",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "tags", "type": {"type": "map", "values": "long"}},
+        {
+            "name": "nested",
+            "type": {"type": "array", "items": {"type": "map", "values": "string"}},
+        },
+    ],
+}
+
+
+def test_encode_df_maps_and_key_pass_through(spark):
+    """Arrow hands map cells over as (key, value) pairs, also inside
+    arrays; encode_df must encode them as the dicts encode_record takes
+    (same bytes), decode_df must give maps back, and a string ``key``
+    column passes through as binary."""
+    rows = [
+        {"id": 1, "tags": {"a": 1, "b": -2}, "nested": [{"x": "y"}, {}]},
+        {"id": 2, "tags": {}, "nested": []},
+    ]
+    df = spark.createDataFrame(
+        [(f"k{r['id']}", r["id"], r["tags"], r["nested"]) for r in rows],
+        "key string, id long, tags map<string,bigint>, nested array<map<string,string>>",
+    )
+    enc = encode_df(df, WITH_MAPS, schema_id=3)
+    got = {bytes(r["key"]): bytes(r["value"]) for r in enc.collect()}
+    assert got == {
+        f"k{r['id']}".encode(): confluent_frame(encode_record(WITH_MAPS, r), 3)
+        for r in rows
+    }
+    back = {r["id"]: r for r in decode_df(enc, WITH_MAPS, confluent=True).collect()}
+    assert back[1]["tags"] == {"a": 1, "b": -2}
+    assert back[1]["nested"] == [{"x": "y"}, {}]
+    assert back[2]["tags"] == {} and back[2]["nested"] == []

@@ -95,3 +95,34 @@ def test_schema_cache_invalidates_on_rewrite(spark, tmp_path):
     again = catalog.load_table(spark, d, "documents")
     assert set(again.columns) == {"doc_id", "text", "extra"}
     assert again.count() == 1
+
+
+def test_memo_misses_on_rewritten_nested_leaf(spark, tmp_path):
+    """A hive-partitioned local table: a leaf rewritten in place changes
+    no entry of the table's top directory, only the leaf's own size and
+    mtime, so the load_table memo must stamp files at every depth."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ingest_spark import catalog
+
+    d = str(tmp_path)
+    path = os.path.join(d, "documents.parquet")
+    for part, ids in (("x", [1, 2]), ("y", [5])):
+        os.makedirs(os.path.join(path, f"part={part}"))
+        pq.write_table(
+            pa.table({"doc_id": ids, "text": [f"t{i}" for i in ids]}),
+            os.path.join(path, f"part={part}", "leaf.parquet"),
+        )
+    first = catalog.load_table(spark, d, "documents")
+    assert first.count() == 3
+    assert catalog.load_table(spark, d, "documents") is first
+    top = sorted((e.name, e.stat().st_mtime_ns) for e in os.scandir(path))
+    pq.write_table(
+        pa.table({"doc_id": [1, 2, 3, 4], "text": ["a", "b", "c", "d"]}),
+        os.path.join(path, "part=x", "leaf.parquet"),
+    )
+    assert sorted((e.name, e.stat().st_mtime_ns) for e in os.scandir(path)) == top
+    again = catalog.load_table(spark, d, "documents")
+    assert again is not first
+    assert again.count() == 5

@@ -41,6 +41,18 @@ def test_qualified_names_resolve_in_vector_fast_paths(spark):
     assert qualified["s"] == simple["s"]
 
 
+def test_quoted_name_splits_dots_outside_backticks(spark):
+    """Dots inside a backticked part belong to the name, not the
+    qualifier path: ```a.b`.vec`` is field ``vec`` of column ``a.b``."""
+    q = similarity._quoted_name
+    assert q("vec") == "`vec`"
+    assert q("x.vec") == "`x`.`vec`"
+    assert q("`a.b`.vec") == "`a.b`.`vec`"
+    assert q("`we``ird`.v") == "`we``ird`.`v`"
+    df = spark.createDataFrame([(([1.0, 2.0],),)], "`a.b` struct<vec: array<double>>")
+    assert df.select(F.expr(q("`a.b`.vec")).alias("v")).first()["v"] == [1.0, 2.0]
+
+
 def test_zero_vector_cosine_is_null(spark):
     df = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "a array<double>, b array<double>")
     assert df.select(cosine_similarity("a", "b")).first()[0] is None

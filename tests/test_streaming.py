@@ -64,6 +64,78 @@ def test_streaming_pipeline_dedups_and_checkpoints(spark, tmp_path):
     assert spark.read.parquet(str(sink)).count() == 7
 
 
+INGEST_SCHEMA = T.StructType(
+    [
+        T.StructField("HourUTC", T.TimestampType()),
+        T.StructField("MunicipalityNo", T.StringType()),
+        T.StructField("ConsumptionkWh", T.DoubleType()),
+    ]
+)
+
+
+def _sink_files_per_batch(sink):
+    """{batch id: partition directory of every file the batch added},
+    read from the file sink's ``_spark_metadata`` log (one JSON line
+    per file after the log's version line)."""
+    meta = os.path.join(sink, "_spark_metadata")
+    out = {}
+    for name in os.listdir(meta):
+        if not name.isdigit():
+            continue
+        with open(os.path.join(meta, name)) as fh:
+            lines = fh.read().splitlines()[1:]
+        out[int(name)] = sorted(
+            os.path.basename(os.path.dirname(json.loads(line)["path"]))
+            for line in lines
+        )
+    return out
+
+
+def test_run_ingest_pipeline_one_file_per_date_no_empty_batch(spark, tmp_path):
+    """Two drops into one checkpoint: each data batch writes exactly one
+    file per ingest_date it holds, no zero-input batch runs, the
+    session's no-data-batch setting is left as it was, and
+    re-deliveries in the second drop that lag less than the watermark
+    are still dropped (state eviction moved to the next data batch)."""
+    from ingest_spark.streaming.pipeline import run_ingest_pipeline
+
+    src, sink, ckpt = (str(tmp_path / n) for n in ("src", "sink", "ckpt"))
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    drops = [
+        # drop 0: two days, with in-drop duplicates, over two files
+        [_rows("2024-01-01", range(24)), _rows("2024-01-02", range(6)) * 2],
+        # drop 1: re-deliveries of 2024-01-02 00-05 (the watermark is
+        # 2024-01-01T05:00 after drop 0), plus new hours on two dates
+        [_rows("2024-01-02", range(12)), _rows("2024-01-03", range(3))],
+    ]
+    progress = []
+    for files in drops:
+        for rows in files:
+            _write_feed(tmp_path / "src", rows)
+        q = run_ingest_pipeline(
+            spark, src, INGEST_SCHEMA, sink, ckpt,
+            hash_cols=["HourUTC", "MunicipalityNo", "ConsumptionkWh"],
+            event_time_col="HourUTC",
+        )
+        q.awaitTermination(120)
+        progress.extend(q.recentProgress)
+        assert spark.conf.get(key, None) == before
+
+    assert [p.numInputRows for p in progress] == [36, 15]
+    assert _sink_files_per_batch(sink) == {
+        0: ["ingest_date=2024-01-01", "ingest_date=2024-01-02"],
+        1: ["ingest_date=2024-01-02", "ingest_date=2024-01-03"],
+    }
+    out = spark.read.parquet(sink)
+    assert out.count() == 24 + 12 + 3
+    assert out.select("record_hash").distinct().count() == 24 + 12 + 3
+
+    # an append-mode aggregation in the same session still gets the
+    # empty batch that finalizes its windows
+    _assert_watermark_late_row_semantics(spark, tmp_path / "wm", "wm_after_ingest")
+
+
 def test_foreach_batch_upsert_idempotent_replay(spark, tmp_path):
     sink = str(tmp_path / "upsert_sink")
     batch = spark.createDataFrame(
@@ -604,6 +676,10 @@ def test_watermark_bounds_state_late_rows_best_effort(spark, tmp_path):
     expectation caught an overclaiming docstring; exactly-once-per-
     window against stragglers belongs to the sink-side idempotent
     upsert, not the watermark."""
+    _assert_watermark_late_row_semantics(spark, tmp_path, "wm_semantics_out")
+
+
+def _assert_watermark_late_row_semantics(spark, tmp_path, query_name):
     import json as _json
 
     from ingest_spark.streaming.pipeline import (
@@ -638,7 +714,7 @@ def test_watermark_bounds_state_late_rows_best_effort(spark, tmp_path):
                                 watermark="30 minutes")
     q = (
         agg.writeStream.format("memory")
-        .queryName("wm_semantics_out")
+        .queryName(query_name)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -661,7 +737,7 @@ def test_watermark_bounds_state_late_rows_best_effort(spark, tmp_path):
     # (same-batch-as-finalization case) — it must NOT be silently lost
     # AND not duplicated
     out = spark.sql(
-        "SELECT event_type, count(*) c FROM wm_semantics_out "
+        f"SELECT event_type, count(*) c FROM {query_name} "
         "WHERE window_start = TIMESTAMP '2024-03-01 09:00:00' GROUP BY 1"
     ).collect()
     assert [(r.event_type, r.c) for r in out] == [("click", 1)]
