@@ -114,20 +114,15 @@ def run_pipeline(spark, src: str, workdir: str) -> dict:
 
 def run_dedup_only(spark, src: str, workdir: str) -> dict:
     """Single-stateful-op variant: hash + watermarked dedup straight
-    to parquet (every surviving row written — the ingest path)."""
-    from ingest_spark.streaming.pipeline import (
-        ingest_transform,
-        read_file_stream,
-        write_stream_parquet,
-    )
+    to parquet (every surviving row written — the ingest path), run
+    through ``run_ingest_pipeline`` itself, so the drain has no
+    zero-row trailing micro-batch."""
+    from ingest_spark.streaming.pipeline import run_ingest_pipeline
 
-    stream = read_file_stream(spark, src, EVENT_SCHEMA, fmt="json")
-    deduped = ingest_transform(
-        stream, ["event_id", "event_type"], "ts", watermark="3 hours"
-    )
     t0 = time.perf_counter()
-    q = write_stream_parquet(
-        deduped, f"{workdir}/out2", f"{workdir}/ckpt2", partition_date_col="ts"
+    q = run_ingest_pipeline(
+        spark, src, EVENT_SCHEMA, f"{workdir}/out2", f"{workdir}/ckpt2",
+        ["event_id", "event_type"], "ts", watermark="3 hours",
     )
     q.awaitTermination()
     wall = time.perf_counter() - t0

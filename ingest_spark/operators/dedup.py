@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ingest_spark.functions.hashing import content_hash, stable_hash64
@@ -39,10 +39,9 @@ from ingest_spark.pinning import plan_input_bytes
 # the skew-safe aggregate + semi-join shape (r16, VERDICT r15 §Next
 # #2; A/B numbers in tools/dup_only_skew_ab.py and
 # OPTIMIZATION_r16.md). Same local-vs-cluster posture as
-# pinning.PIN_MIN_INPUT_BYTES.
-_SKEWSAFE_MIN_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SKEWSAFE_MIN_INPUT_BYTES", str(1 << 30))
-)
+# pinning.pin_min_input_bytes, and like it read at call time.
+def _skewsafe_min_input_bytes() -> int:
+    return int(os.environ.get("SPARK_GRAFT_SKEWSAFE_MIN_INPUT_BYTES", str(1 << 30)))
 
 # Mersenne prime 2^31-1: modulus for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) mod P. The base hash is 28-bit
@@ -216,6 +215,7 @@ def minhash_signatures_df(
     text_col: str,
     num_hashes: int = 4,
     shingle_n: int = 3,
+    shingles_col: str | None = None,
 ) -> DataFrame:
     """Scale-path MinHash: one row per doc with columns m0..m{k-1}.
 
@@ -224,9 +224,12 @@ def minhash_signatures_df(
     -> hash-aggregate k mins on doc_id with map-side partial
     aggregation. 10-20x faster than the interpreted higher-order-
     function form and linear in total shingle count.
+    ``shingles_col`` names an array column already holding
+    ``shingles(text_col, shingle_n)``; the text is then not re-split.
     """
+    grams = F.col(shingles_col) if shingles_col else shingles(text_col, shingle_n)
     ex = df.select(
-        F.col(id_col), F.explode(shingles(text_col, shingle_n)).alias("__shingle")
+        F.col(id_col), F.explode(grams).alias("__shingle")
     ).select(
         id_col, stable_hash64("__shingle", hex_digits=MINHASH_HEX_DIGITS).alias("__h")
     )
@@ -244,6 +247,7 @@ def minhash_band_table(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
+    shingles_col: str | None = None,
 ) -> DataFrame:
     """The LSH band table ``(__id, __bucket)`` — one row per (doc,
     band), bucket = band index + the band's signature rows. This is
@@ -252,12 +256,13 @@ def minhash_band_table(
     of re-signing the corpus (`ingest_spark.incremental` does exactly
     that). Factored out of :func:`minhash_lsh_candidates` so the
     within-corpus self-join and the cross-corpus probe share one
-    banding definition."""
+    banding definition. ``shingles_col``: as in
+    :func:`minhash_signatures_df`."""
     assert num_hashes % bands == 0, (num_hashes, bands)
     # a remainder would silently drop trailing hash functions from the
     # banding, changing the candidate-probability curve unannounced
     rows = num_hashes // bands
-    sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n)
+    sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n, shingles_col)
     buckets = [
         F.concat_ws(
             ",",
@@ -463,6 +468,29 @@ def banded_hamming_pairs(
     )
 
 
+def _pin_with_fingerprint(frame: DataFrame, *cols: str) -> tuple[DataFrame, tuple]:
+    """``frame.localCheckpoint()`` plus an order-insensitive fingerprint
+    of its rows, (count, exact decimal sum of xxhash64(cols)), read
+    through an Observation on the checkpoint's own job — no second
+    aggregate job over the pinned rows. Hashing first keeps it
+    type-agnostic (ADVICE r15: a decimal sum of the ids themselves
+    crashed on string ids under ANSI); the decimal(38,0) sum cannot
+    overflow. Two labelings or edge sets over one node set compare
+    equal up to the 2^-64-per-round xxhash64 collision bound. A fresh
+    Observation per call: each one is filled by exactly one action."""
+    obs = Observation()
+    pinned = frame.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("h"),
+    ).localCheckpoint()
+    row = obs.get
+    return pinned, (row["n"], row["h"])
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -508,10 +536,10 @@ def connected_components(
     # labels start as the identity, round 1 needs no join at all:
     # min(dst) grouped by src IS the first propagation. Convergence is
     # read from a type-agnostic labeling fingerprint (r16, ADVICE r15:
-    # the r15 decimal label-sum broke on string ids) over the
-    # just-materialized checkpoint, same cost the old _changed count
-    # paid. Measured at sf0.1: 8 -> ~5 jobs and 3 -> 2 operators per
-    # round, same rounds, identical labels.
+    # the r15 decimal label-sum broke on string ids) observed on the
+    # round's own checkpoint (`_pin_with_fingerprint`). Measured at
+    # sf0.1: 8 -> ~5 jobs and 3 -> 2 operators per round, same rounds,
+    # identical labels.
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -521,34 +549,13 @@ def connected_components(
         .localCheckpoint()
     )
 
-    def _label_fingerprint(frame: DataFrame):
-        # Type-agnostic labeling fingerprint (ADVICE r15): the r15
-        # decimal-sum probe cast `component` itself, which crashes
-        # under ANSI for string ids (CAST_INVALID_INPUT) and, with
-        # ANSI off, NULLs the sum and declares any string-id graph
-        # "converged" after one round. Hash first: (count, exact
-        # decimal sum of xxhash64(id, component)) works for every
-        # orderable id type — the same engine-internal fingerprint
-        # connected_components_star already uses. The node set is
-        # constant across rounds, so fingerprint equality ⟺ no label
-        # changed (up to the 2^-64-per-round xxhash64 collision bound
-        # the star variant already accepts).
-        row = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("id", "component").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    labels = (
+    labels, prev_fp = _pin_with_fingerprint(
         edges.groupBy("src")
         .agg(F.min("dst").alias("component"))
-        .withColumnRenamed("src", "id")
-        .localCheckpoint()
+        .withColumnRenamed("src", "id"),
+        "id",
+        "component",
     )
-    prev_fp = _label_fingerprint(labels)
     # an empty graph is trivially converged; any non-empty graph needs
     # at least one confirming round (exactly like the old _changed
     # formulation, where round 1 of a non-empty graph always changed
@@ -557,15 +564,14 @@ def connected_components(
     for _ in range(max_iterations - 1):
         if converged:
             break
-        stepped = (
+        labels, cur_fp = _pin_with_fingerprint(
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
             .agg(F.min("component").alias("component"))
-            .withColumnRenamed("src", "id")
-            .localCheckpoint()
+            .withColumnRenamed("src", "id"),
+            "id",
+            "component",
         )
-        cur_fp = _label_fingerprint(stepped)
-        labels = stepped
         if cur_fp == prev_fp:
             converged = True
             break
@@ -643,17 +649,18 @@ def connected_components_star(
 
     Convergence is detected by an order-insensitive edge-set
     fingerprint (count + sum of xxhash64(src,dst) — engine-internal,
-    never compared cross-engine), one cheap aggregate per round over
-    the already-checkpointed frame. Non-convergence raises, exactly
-    like the label variant.
+    never compared cross-engine), observed on each round's own
+    checkpoint (`_pin_with_fingerprint`). Non-convergence raises,
+    exactly like the label variant.
 
     Returns (id, component) for every node that appears in ``pairs``.
     """
-    edges = (
+    edges, fp = _pin_with_fingerprint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "src",
+        "dst",
     )
     # all_nodes is referenced exactly once (the final left join) and
     # derives from the ALREADY-pinned initial edge set — keeping it
@@ -666,19 +673,6 @@ def connected_components_star(
         .distinct()
     )
 
-    def fingerprint(e: DataFrame):
-        row = e.agg(
-            F.count("*").alias("n"),
-            # decimal(38,0) sum: a long sum of 64-bit hashes overflows
-            # under ANSI mode
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    fp = fingerprint(edges)
     converged = False
     for _ in range(max_iterations):
         # r16 (VERDICT r15 §Next #3): materialize the large-star output
@@ -695,8 +689,9 @@ def connected_components_star(
         # pinning small-star's ``directed`` as well was measured WORSE
         # (8.0 s — the second round trip exceeds the trivial
         # orientation re-projection it saves).
-        edges = _small_star(_large_star(edges).localCheckpoint()).localCheckpoint()
-        new_fp = fingerprint(edges)
+        edges, new_fp = _pin_with_fingerprint(
+            _small_star(_large_star(edges).localCheckpoint()), "src", "dst"
+        )
         if new_fp == fp:
             converged = True
             break
@@ -966,7 +961,7 @@ def dup_gram_doubling_profile(
     # fingerprint-asserted in the A/B and oracle-hash-checked).
     corpus_bytes = plan_input_bytes(df)
     skew_safe = (
-        corpus_bytes is None or corpus_bytes >= _SKEWSAFE_MIN_INPUT_BYTES
+        corpus_bytes is None or corpus_bytes >= _skewsafe_min_input_bytes()
     )
 
     def _dup_only(cand: DataFrame) -> DataFrame:

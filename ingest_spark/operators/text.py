@@ -487,14 +487,17 @@ def bm25_multiquery(
     # r16: gated on input size (VERDICT r15 §Next #1 — the driver's
     # bench regressed 0.75x with the unconditional pin and this
     # round's alternating collect A/Bs at sf0.1/sf1 were a tie at
-    # best; below pinning.PIN_MIN_INPUT_BYTES the duplicate tf subtree
+    # best; below pinning.pin_min_input_bytes() the duplicate tf subtree
     # is cheaper than its materialization round trip).
     from ingest_spark.pinning import pin_if_big
 
+    # sized by the corpus alone: the query table is a small
+    # driver-built frame whose plan leaf carries no file size
     tf = pin_if_big(
         matched.groupBy("query_id", id_col, "term", "_dl").agg(
             F.count(F.lit(1)).cast("double").alias("_tf")
-        )
+        ),
+        sized_by=docs,
     )
     dfreq = (
         tf.groupBy("term")

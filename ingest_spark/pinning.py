@@ -114,43 +114,51 @@ def pin(df: DataFrame) -> DataFrame:
 # executes in parallel inside one job), so the crossover sits above the
 # largest locally measurable input; at 100 TB the gated pins fire
 # unconditionally because any corpus-sized scan dwarfs the threshold.
-PIN_MIN_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PIN_MIN_INPUT_BYTES", str(1 << 30))
-)
+# Read at call time, so a changed environment takes effect without a
+# re-import.
+def pin_min_input_bytes() -> int:
+    return int(os.environ.get("SPARK_GRAFT_PIN_MIN_INPUT_BYTES", str(1 << 30)))
 
 
-# Leaves without real statistics (driver-created LocalRelation->RDD,
-# un-analyzed RDD scans) report spark.sql.defaultSizeInBytes =
-# Long.MaxValue — a sentinel, not a measurement. Anything at or above
-# this is "unknown", not "huge".
-_UNKNOWN_LEAF_BYTES = 1 << 60
+def _is_file_scan(leaf) -> bool:
+    """A ``LogicalRelation`` over a ``HadoopFsRelation``: the (V1) file
+    scan every built-in file source plans by default. A V2 file scan
+    counts as unknown, the fail-safe side."""
+    return (
+        leaf.getClass().getSimpleName() == "LogicalRelation"
+        and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    )
 
 
 def plan_input_bytes(df: DataFrame) -> int | None:
-    """Total sizeInBytes of the optimized plan's KNOWN leaves — for
-    file scans this is actual file bytes, the one stats estimate that
-    stays reliable through explodes/joins/aggregates (whose own
-    row-width scaling wanders orders of magnitude). Leaves reporting
-    the defaultSizeInBytes sentinel (driver-local query tables,
-    RDD-backed frames) are skipped: counting Long.MaxValue would
-    force-pin every plan containing a tiny createDataFrame side input.
-    None when no leaf has a real size or the JVM probe fails (callers
-    treat unknown as big: pin)."""
+    """Total file bytes read by the optimized plan: the sum of its
+    leaves' sizeInBytes when EVERY leaf is a file scan — for a file
+    scan that is the bytes on disk, the one stats estimate that stays
+    reliable through explodes/joins/aggregates. Any other leaf makes
+    the size unknown (None), and callers treat unknown as big (pin):
+    a ``localCheckpoint``/``LogicalRDD`` leaf carries the optimizer's
+    estimate of the plan it replaced (1.3e12 bytes for a 595 KB
+    input was seen), a driver-local relation or an RDD scan reports a
+    guess or the Long.MaxValue sentinel, and none of them is bytes.
+    None also when the JVM probe fails."""
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        sizes = [
-            int(str(leaves.apply(i).stats().sizeInBytes()))
-            for i in range(leaves.size())
-        ]
-        known = [s for s in sizes if s < _UNKNOWN_LEAF_BYTES]
-        if not known:
-            return None
-        return sum(known)
+        total = 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if not _is_file_scan(leaf):
+                return None
+            total += int(str(leaf.stats().sizeInBytes()))
+        return total
     except Exception:
         return None
 
 
-def pin_if_big(df: DataFrame, min_input_bytes: int | None = None) -> DataFrame:
+def pin_if_big(
+    df: DataFrame,
+    min_input_bytes: int | None = None,
+    sized_by: DataFrame | None = None,
+) -> DataFrame:
     """``pin()`` gated on the frame's input volume: below the
     threshold the frame is returned UNPINNED (the duplicate subtree
     re-executes — measured cheaper than a materialization round trip
@@ -158,10 +166,12 @@ def pin_if_big(df: DataFrame, min_input_bytes: int | None = None) -> DataFrame:
     (the duplicate subtree is a corpus re-scan — the thing pinning
     exists to kill at 100 TB). An unknown input size pins: the
     fail-safe direction at scale costs one round trip, the other
-    direction costs a full re-scan."""
+    direction costs a full re-scan. ``sized_by`` names the frame whose
+    input decides (default ``df``): the corpus side of a plan that
+    also joins a small driver-built table."""
     if min_input_bytes is None:
-        min_input_bytes = PIN_MIN_INPUT_BYTES
-    size = plan_input_bytes(df)
+        min_input_bytes = pin_min_input_bytes()
+    size = plan_input_bytes(df if sized_by is None else sized_by)
     if size is not None and size < min_input_bytes:
         return df
     return pin(df)

@@ -4842,7 +4842,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice); p is referenced once and stays lazy. r16: gated on input
     # size — the driver's r15 bench and this round's alternating A/Bs
     # at sf0.1 AND sf1 showed the unconditional pin losing every
-    # adjacent pair (0.83x driver): below pinning.PIN_MIN_INPUT_BYTES
+    # adjacent pair (0.83x driver): below pinning.pin_min_input_bytes()
     # the re-executed aggregates run in parallel inside one job and
     # cost less than two materialization round trips.
     v = pin_if_big(
@@ -8399,15 +8399,14 @@ def incremental_ingest_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is the hex content hash, and _bloom_positions hashes its key),
     and distinct 3-gram novelty keys (hash128 collisions are ~2^-128,
     so the distinct-gk count equals the distinct-gram count the SQL
-    side computes). Counting the tables proves the maintainers
+    side computes). Counting the tables' live segments proves the seed
     installed exactly the keyed state the contract declares — a
-    dropped partition or double-applied batch shifts a count."""
-    import os
+    dropped partition, a repeated key or a double-applied batch shifts
+    a count."""
     import shutil
     import tempfile
 
     from ingest_spark import incremental
-    from ingest_spark.streaming.pipeline import RenameSwap
 
     docs = load_table(spark, sf_dir, "documents")
     state = tempfile.mkdtemp(prefix="ingest_state_seed_")
@@ -8422,9 +8421,7 @@ def incremental_ingest_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("bloom", "n_bloom"),
             ("novelty", "n_novelty"),
         ):
-            n = spark.read.parquet(
-                RenameSwap.resolve(os.path.join(state, tbl))
-            ).count()
+            n = incremental.read_state(spark, state, tbl).count()
             counts.append(F.lit(n).cast("long").alias(col))
         return spark.range(1).select(*counts)
     finally:

@@ -823,6 +823,20 @@ def _fs_rmtree(path: str) -> None:
         pass
 
 
+def _fs_rename(src: str, dst: str) -> None:
+    """Rename a file or directory on any scheme; raises when the
+    filesystem reports failure. Atomic on POSIX and HDFS; on an object
+    store it is a copy then a delete, so callers that need atomicity
+    commit through a pointer or manifest flip instead."""
+    if not _is_uri(src):
+        os.rename(src, dst)
+        return
+    fs, src_jpath = _hadoop_fs(src)
+    _, dst_jpath = _hadoop_fs(dst)
+    if not fs.rename(src_jpath, dst_jpath):
+        raise OSError(f"rename {src!r} -> {dst!r} failed")
+
+
 def _recover_swap(table_path: str) -> None:
     """Crash recovery for the staging->swap discipline (ADVICE r6):
     the swap is two renames (table -> .old-<id>, staging -> table); a

@@ -214,6 +214,52 @@ def test_connected_components_deep_chain_and_budget(spark):
     assert dedup.connected_components(empty, max_iterations=1).count() == 0
 
 
+def test_connected_components_observed_convergence(spark):
+    """(~20 s) Each round's convergence fingerprint is read through an
+    Observation on the round's own checkpoint, not a second aggregate
+    job. The observed (count, hash-sum) equals the separate aggregate
+    over the pinned rows, and both variants still label the sf0.1 LSH
+    candidate graph and a deep chain (diameter 19) exactly like
+    union-find; an empty graph returns no rows without waiting on an
+    Observation that never fills."""
+    import os
+
+    from ingest_spark.catalog import load_table
+
+    # the repository's sf0.1 documents table, as copied for perfbench
+    sf01 = os.path.join(os.path.dirname(__file__), "..", "perfbench", "data", "sf0.1")
+    docs = load_table(spark, sf01, "documents")
+    lsh = [
+        (r.id_a, r.id_b)
+        for r in dedup.minhash_lsh_candidates(
+            docs, "doc_id", "text", num_hashes=16, bands=4, shingle_n=3
+        ).collect()
+    ]
+    chain = [(i, i + 1) for i in range(1, 20)]
+    for pairs in (lsh, chain):
+        assert pairs
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        pinned, fp = dedup._pin_with_fingerprint(df, "id_a", "id_b")
+        row = pinned.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("id_a", "id_b").cast("decimal(38,0)")).alias("h"),
+        ).first()
+        assert fp == (row["n"], row["h"]) == (len(pairs), row["h"])
+        expect = _uf_components(pairs)
+        for algorithm in ("label", "star"):
+            got = {
+                r.id: r.component
+                for r in dedup.connected_components(
+                    df, algorithm=algorithm, max_iterations=25
+                ).collect()
+            }
+            assert got == expect, algorithm
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup._pin_with_fingerprint(empty, "id_a", "id_b")[1] == (0, 0)
+    for algorithm in ("label", "star"):
+        assert dedup.connected_components(empty, algorithm=algorithm).count() == 0
+
+
 def test_connected_components_string_ids(spark):
     """r16 (ADVICE r15): the convergence probe must be type-agnostic —
     the r15 decimal(38,0) cast of the component label crashed under
@@ -441,7 +487,7 @@ def test_dup_gram_doubling_profile_shapes_agree(spark, monkeypatch, tmp_path):
     df = spark.read.parquet(path)
     results = {}
     for label, threshold in (("window", 1 << 60), ("semi", 0)):
-        monkeypatch.setattr(dd, "_SKEWSAFE_MIN_INPUT_BYTES", threshold)
+        monkeypatch.setenv("SPARK_GRAFT_SKEWSAFE_MIN_INPUT_BYTES", str(threshold))
         results[label] = {
             r.doc_id: r.max_dup_len
             for r in dd.dup_gram_doubling_profile(df, "doc_id", "text").collect()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
@@ -110,6 +111,35 @@ def _decisions_dict(df):
     }
 
 
+def _sizes(spark, state):
+    return {t: incremental.read_state(spark, state, t).count() for t in incremental._TABLES}
+
+
+def _sizes_recount(spark, kept_rows):
+    """Each table's row count recomputed from the kept corpus itself:
+    distinct hashes, (bucket, doc) pairs, bloom bits and gram keys."""
+    proj = incremental._project(_corpus(spark, kept_rows), "doc_id", "text")
+    return {
+        "hashes": proj.select("h").distinct().count(),
+        "bands": incremental._band_rows(proj).distinct().count(),
+        "bloom": proj.select(
+            F.explode(dedup._bloom_positions("h", incremental.BLOOM_M, incremental.BLOOM_K))
+        ).distinct().count(),
+        "novelty": incremental._gram_rows(proj).select("gk").distinct().count(),
+    }
+
+
+def _assert_only_live_visible(state):
+    """Every non-hidden entry of a table dir is a live segment: what a
+    directory listing (pyarrow, perfbench's row counts) sees is the
+    state."""
+    for t in incremental._TABLES:
+        table = os.path.join(state, t)
+        live = {name for name, _ in incremental._manifest(table)["segments"]}
+        visible = {n for n in os.listdir(table) if not n.startswith(("_", "."))}
+        assert visible == live, (t, visible, live)
+
+
 def test_walkthrough_matches_from_scratch_across_batches(spark, tmp_path):
     """Two committed batches after a seed corpus: every batch's
     incremental decisions must equal the from-scratch recompute where
@@ -146,15 +176,9 @@ def test_commit_replay_is_noop_and_state_bounded(spark, tmp_path):
     d1 = incremental.ingest_batch(spark, b1, state)
     incremental.commit_batch(b1, d1, state, batch_id=1)
 
-    def sizes():
-        return {
-            t: spark.read.parquet(os.path.join(state, t)).count()
-            for t in ("hashes", "bands", "bloom", "novelty")
-        }
-
-    before = sizes()
+    before = _sizes(spark, state)
     incremental.commit_batch(b1, d1, state, batch_id=1)  # at-least-once replay
-    assert sizes() == before
+    assert _sizes(spark, state) == before
 
     kept_docs = 3 + 1  # seed + doc 12
     assert before["hashes"] == kept_docs  # distinct content hashes
@@ -164,42 +188,51 @@ def test_commit_replay_is_noop_and_state_bounded(spark, tmp_path):
     assert before["novelty"] > 0
 
 
-def test_ingest_and_commit_resumes_mid_commit_crash(spark, tmp_path):
-    """Crash between maintainers: some state tables already carry the
-    batch, others don't. ingest_and_commit must REUSE the persisted
-    decision frame (not rescore against half-mutated state, which
-    would see the batch's own docs as duplicates) and bring every
-    table to exactly-once."""
+def test_ingest_and_commit_resumes_mid_commit_crash(spark, tmp_path, monkeypatch):
+    """Crash between tables (~20 s): the commit dies after some tables
+    published their batch-1 segment and before the others did.
+    ingest_and_commit must REUSE the persisted decision frame (not
+    rescore against half-mutated state, which would see the batch's
+    own docs as duplicates) and bring every table to exactly-once."""
     state = str(tmp_path / "state")
     incremental.init_state(spark, _corpus(spark, SEED), state)
     b1 = _corpus(spark, BATCH1)
+    d1 = _decisions_dict(incremental.ingest_batch(spark, b1, state))
 
-    # simulate: decisions persisted + ONLY the hashes maintainer ran
-    d1 = incremental.ingest_batch(spark, b1, state)
-    d1.write.mode("overwrite").parquet(os.path.join(state, "decisions-1"))
-    d1_stored = spark.read.parquet(os.path.join(state, "decisions-1"))
-    kept = b1.join(
-        d1_stored.filter("kept").select("doc_id"), "doc_id", "semi"
-    ).localCheckpoint()
-    incremental._maintainers(state)["hashes"](
-        incremental._batch_tables(kept)["hashes"], 1
-    )
-    # ...crash here; resume:
-    out = incremental.ingest_and_commit(spark, b1, state, batch_id=1)
-    assert _decisions_dict(out) == _decisions_dict(d1_stored)
-    sizes = {
-        t: spark.read.parquet(os.path.join(state, t)).count()
-        for t in ("hashes", "bands", "bloom", "novelty")
+    # the kill: novelty's writer dies after writing and renaming its
+    # segment but before publishing it, while the other three tables
+    # publish theirs
+    real = incremental._publish
+
+    def dying_publish(table_path, applied, segments):
+        if applied == 1 and table_path.endswith("novelty"):
+            raise RuntimeError("killed before publish")
+        real(table_path, applied, segments)
+
+    monkeypatch.setattr(incremental, "_publish", dying_publish)
+    with pytest.raises(RuntimeError, match="killed"):
+        incremental.ingest_and_commit(spark, b1, state, batch_id=1)
+    monkeypatch.setattr(incremental, "_publish", real)
+    applied = {
+        t: incremental._manifest(os.path.join(state, t))["applied"]
+        for t in incremental._TABLES
     }
+    assert applied == {"hashes": 1, "bands": 1, "bloom": 1, "novelty": 0}
+    # the dead writer's renamed-but-unpublished segment is not live
+    assert _sizes(spark, state)["novelty"] == _sizes_recount(spark, SEED)["novelty"]
+
+    # ...resume:
+    out = incremental.ingest_and_commit(spark, b1, state, batch_id=1)
+    assert _decisions_dict(out) == d1
+    sizes = _sizes(spark, state)
     kept_docs = 3 + 1
     assert sizes["hashes"] == kept_docs
     assert sizes["bands"] == kept_docs * incremental.BANDS
+    assert sizes == _sizes_recount(spark, SEED + [BATCH1[2]])
+    _assert_only_live_visible(state)
     # a second full replay changes nothing anywhere
     incremental.ingest_and_commit(spark, b1, state, batch_id=1)
-    assert sizes == {
-        t: spark.read.parquet(os.path.join(state, t)).count()
-        for t in ("hashes", "bands", "bloom", "novelty")
-    }
+    assert sizes == _sizes(spark, state)
 
 
 def test_quality_artifact_trains_once_scores_later(spark, tmp_path):
@@ -276,8 +309,7 @@ def test_streaming_ingest_sink_kill_resume(spark, tmp_path):
 
     def _state_sets(state):
         return {
-            t: {tuple(r) for r in spark.read.parquet(
-                os.path.join(state, t)).drop("n_rows").collect()}
+            t: {tuple(r) for r in incremental.read_state(spark, state, t).collect()}
             for t in incremental._TABLES
         }
 
@@ -309,29 +341,117 @@ def test_batch_id_zero_rejected(spark, tmp_path):
         incremental.ingest_and_commit(spark, b1, state, batch_id=0)
 
 
-def test_walkthrough_under_pointer_swap(spark, tmp_path):
-    """SCALING.md §9 end-to-end: the whole init/ingest/commit
-    walkthrough on the object-store-safe PointerSwap strategy must
-    produce decisions identical to the default RenameSwap run."""
-    from ingest_spark.streaming.pipeline import PointerSwap
+def test_walkthrough_on_uri_path(spark, tmp_path):
+    """SCALING.md §9 end-to-end (~18 s): the init/ingest/commit
+    walkthrough on a scheme-qualified ``file://`` state dir, where
+    every manifest read, flip, rename, listing and delete goes through
+    the Hadoop FileSystem API (the object-store path). Decisions match
+    the plain-path walkthrough's, the state counts match a recount of
+    the kept corpus, and a replay is a no-op."""
+    state = "file://" + str(tmp_path / "state")
+    incremental.init_state(spark, _corpus(spark, SEED), state)
+    d1 = _decisions_dict(
+        incremental.ingest_and_commit(spark, _corpus(spark, BATCH1), state, 1)
+    )
+    d2 = _decisions_dict(
+        incremental.ingest_and_commit(spark, _corpus(spark, BATCH2), state, 2)
+    )
+    assert {i: v[:2] for i, v in d1.items()} == {
+        10: (True, True), 11: (False, True), 12: (False, False),
+    }
+    assert {i: v[:2] for i, v in d2.items()} == {
+        20: (True, True), 21: (True, True), 22: (False, False),
+    }
+    want = _sizes_recount(spark, SEED + [BATCH1[2], BATCH2[2]])
+    assert _sizes(spark, state) == want
+    incremental.ingest_and_commit(spark, _corpus(spark, BATCH2), state, 2)
+    assert _sizes(spark, state) == want
+    _assert_only_live_visible(str(tmp_path / "state"))
 
-    results = {}
-    for name, swap in (("rename", None), ("pointer", PointerSwap)):
-        state = str(tmp_path / f"state_{name}")
-        kw = {} if swap is None else {"swap": swap}
-        incremental.init_state(spark, _corpus(spark, SEED), state, **kw)
-        d1 = incremental.ingest_and_commit(
-            spark, _corpus(spark, BATCH1), state, 1, **kw
-        )
-        d2 = incremental.ingest_and_commit(
-            spark, _corpus(spark, BATCH2), state, 2, **kw
-        )
-        results[name] = (_decisions_dict(d1), _decisions_dict(d2))
-        # replay under the same strategy: no-op
-        incremental.ingest_and_commit(
-            spark, _corpus(spark, BATCH2), state, 2, **kw
-        )
-    assert results["rename"] == results["pointer"]
+
+def test_leftovers_of_crashed_writes_are_ignored_and_recovered(spark, tmp_path):
+    """(~20 s) A leftover ``_staging`` dir, a compaction output renamed
+    but never published, and the inputs of a compaction that published
+    but died before deleting them: readers see none of them, and the
+    next commit deletes them and leaves the listing equal to the live
+    set, with exact counts."""
+    import shutil
+
+    state = str(tmp_path / "state")
+    incremental.init_state(spark, _corpus(spark, SEED), state)
+    want = _sizes(spark, state)
+    for t in incremental._TABLES:
+        table = os.path.join(state, t)
+        (live,) = incremental._manifest(table)["segments"]
+        seg = os.path.join(table, live[0])
+        # a crashed segment write and a crashed compaction's output
+        shutil.copytree(seg, os.path.join(table, "_staging-000001"))
+        shutil.copytree(seg, os.path.join(table, "seg-000001-m0"))
+        # a published compaction whose input was never deleted: the
+        # manifest names only the merged copy
+        shutil.copytree(seg, os.path.join(table, "seg-000000-m0"))
+        incremental._publish(table, 0, [["seg-000000-m0", live[1]]])
+    assert _sizes(spark, state) == want
+    d1 = incremental.ingest_batch(spark, _corpus(spark, BATCH1), state)
+    assert _decisions_dict(d1) == _from_scratch(spark, SEED, BATCH1)
+    incremental.commit_batch(_corpus(spark, BATCH1), d1, state, batch_id=1)
+    _assert_only_live_visible(state)
+    assert _sizes(spark, state) == _sizes_recount(spark, SEED + [BATCH1[2]])
+
+
+def test_compacted_state_scores_identically(spark, tmp_path, monkeypatch):
+    """(~25 s) Compaction merges segments of one size tier; the
+    compacted state must score every probe doc byte-identically to the
+    uncompacted one, and a commit that compacts keeps the counts
+    exact. Fanout 2 makes the tiny fixture's segments merge."""
+    import shutil
+
+    state = str(tmp_path / "state")
+    incremental.init_state(spark, _corpus(spark, SEED), state)
+    incremental.ingest_and_commit(spark, _corpus(spark, BATCH1), state, 1)
+    probe = _corpus(spark, BATCH2 + [(23, SEED[1][1])])
+
+    def scored(st):
+        return sorted(tuple(r) for r in incremental.ingest_batch(spark, probe, st).collect())
+
+    before = scored(state)
+    assert {t: len(incremental.segment_paths(state, t)) for t in ("hashes", "bands")} == {
+        "hashes": 2, "bands": 2,
+    }
+    compacted = str(tmp_path / "compacted")
+    shutil.copytree(state, compacted)
+    monkeypatch.setattr(incremental, "_FANOUT", 2)
+    for t in incremental._TABLES:
+        table = os.path.join(compacted, t)
+        incremental._compact(spark, table, incremental._manifest(table))
+    n_segs = {t: len(incremental.segment_paths(compacted, t)) for t in incremental._TABLES}
+    assert n_segs["hashes"] == n_segs["bands"] == 1, n_segs
+    assert scored(compacted) == before
+    _assert_only_live_visible(compacted)
+    # compaction inside a commit: counts stay exact
+    incremental.ingest_and_commit(spark, _corpus(spark, BATCH2), compacted, 2)
+    kept = SEED + [BATCH1[2], BATCH2[2]]
+    assert _sizes(spark, compacted) == _sizes_recount(spark, kept)
+    _assert_only_live_visible(compacted)
+
+
+def test_exact_dup_flagged_when_bloom_bits_repeat(spark, tmp_path):
+    """(~12 s) The bloom prefilter counts joined rows against hits, so
+    a bit stored twice (two segments sharing it) must not turn a
+    stored exact duplicate into a miss."""
+    import shutil
+
+    state = str(tmp_path / "state")
+    incremental.init_state(spark, _corpus(spark, SEED), state)
+    table = os.path.join(state, "bloom")
+    (seg,) = incremental._manifest(table)["segments"]
+    shutil.copytree(os.path.join(table, seg[0]), os.path.join(table, "seg-000000-copy"))
+    incremental._publish(table, 0, [seg, ["seg-000000-copy", seg[1]]])
+    bits = incremental.read_state(spark, state, "bloom")
+    assert bits.count() == 2 * bits.distinct().count()
+    got = _decisions_dict(incremental.ingest_batch(spark, _corpus(spark, BATCH1), state))
+    assert got == _from_scratch(spark, SEED, BATCH1)
+    assert got[10][0] is True
 
 
 def test_signature_mismatch_fails_loudly(spark, tmp_path):

@@ -8,6 +8,8 @@ results, so a policy regression can't silently change either the
 fault posture or an answer.
 """
 
+import os
+
 from pyspark.sql import functions as F
 
 from ingest_spark import pinning
@@ -93,3 +95,35 @@ def test_pin_if_big_gates_on_input_bytes(spark):
         assert {(r.k, r["count"]) for r in pinned.collect()} == {
             (r.k, r["count"]) for r in df.collect()
         }
+
+
+def test_plan_input_bytes_counts_only_file_scans(spark, tmp_path, monkeypatch):
+    """(~5 s) The size gate sums file-scan leaves only. A
+    ``localCheckpoint`` leaf reports the optimizer's estimate of the
+    plan it replaced, not bytes (1.3e12 for a 595 KB input was seen),
+    so any non-file leaf makes the size unknown, which pins; the
+    threshold is read from the environment at call time."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(1000).write.parquet(path)
+    on_disk = sum(
+        os.path.getsize(os.path.join(path, n))
+        for n in os.listdir(path) if not n.startswith(("_", "."))
+    )
+    df = spark.read.parquet(path)
+    assert pinning.plan_input_bytes(df) == on_disk
+    agg = df.groupBy((F.col("id") % 5).alias("k")).count()
+    assert pinning.plan_input_bytes(agg) == on_disk
+    pinned = df.localCheckpoint()
+    assert pinning.plan_input_bytes(pinned) is None
+    assert pinning.plan_input_bytes(df.join(pinned, "id")) is None
+    side = spark.createDataFrame([(1, "a")], "id long, tag string")
+    assert pinning.plan_input_bytes(df.join(side, "id")) is None
+    # unknown size pins, whatever the threshold
+    assert pinning.pin_if_big(pinned, min_input_bytes=1 << 62) is not pinned
+    # the corpus side can size a plan that joins a driver-built table
+    joined = df.join(side, "id")
+    assert pinning.pin_if_big(joined, sized_by=df) is joined
+    monkeypatch.setenv("SPARK_GRAFT_PIN_MIN_INPUT_BYTES", "0")
+    assert pinning.pin_if_big(agg) is not agg
+    monkeypatch.setenv("SPARK_GRAFT_PIN_MIN_INPUT_BYTES", str(on_disk + 1))
+    assert pinning.pin_if_big(agg) is agg
