@@ -9,7 +9,8 @@ designed for 100 TB scale.
 
 Layout:
     session    — SparkSession factory with scale-oriented defaults
-    catalog    — test-table loading / temp-view registration
+    catalog    — test-table loading
+    state_tables — crash-safe batch-maintained tables (segment manifest)
     schemas/   — Avro-contract <-> StructType tooling + the 4 contracts
     functions/ — column-level helpers (hashing, vectors, text)
     operators/ — DataFrame -> DataFrame operators (dedup, flatten, ...)

@@ -2,8 +2,7 @@
 
 Mirrors the reference's "files at rest on HDFS" layer (Kafka-Connect
 HDFS sink, cluster/configuration.json:4-16): datasets are directories
-of columnar files; queries run over them via temp views (the ksqlDB
-``CREATE STREAM`` analogue, cluster/README.md:107-118).
+of columnar files, each loaded by `load_table`.
 """
 
 from __future__ import annotations
@@ -12,19 +11,6 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -246,18 +232,3 @@ def load_table(
     if stamp is not None:
         session_cache[(path, ts_after)] = (stamp, df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names if os.path.exists(table_path(sf_dir, n))}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view so ``spark.sql`` works over
-    them — the typed-SQL-view capability (reference Q1)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

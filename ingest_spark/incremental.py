@@ -27,18 +27,13 @@ holding only that batch's NEW keys, and only the key columns.
               build with different constants fails LOUDLY instead of
               silently missing every duplicate (r9)
 
-A table directory holds ``seg-*`` directories and one ``_SEGMENTS``
-manifest: the last applied batch id plus the live segments with their
-row counts. The manifest is the only truth. A segment is written to a
-``_staging-*`` directory, renamed to its ``seg-*`` name, and becomes
-live only when the manifest is replaced in one atomic step
-(``_fs_write_text(..., atomic_replace=True)``: os.replace locally, a
-rename or single PUT through Hadoop on URI paths), so a crash leaves
-either no segment or a whole one, on every scheme. Readers read the
-manifest's explicit segment paths (`read_state`), never a table root.
-Anything not live (staging dirs, a segment renamed but never
-published, segments a compaction replaced) is deleted by the next
-call that touches the table, before it reads.
+Each table is a `state_tables` table: ``seg-*`` directories listed by
+a ``_SEGMENTS`` manifest, published by one atomic manifest flip and
+recovered by the next call that touches the table; that module's
+docstring has the layout, the commit steps and the recovery rules.
+Here every batch APPENDS one segment per table (``seg-<batch_id>``),
+and readers read the manifest's segment paths (`read_state`), never a
+table root.
 
 Keys never repeat across a table's segments, so every probe is a pure
 existence test and no count inflates: a kept doc's hash is not in
@@ -82,23 +77,14 @@ within-batch collapse is wanted — documented, not hidden.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ingest_spark import artifacts
+from ingest_spark import artifacts, state_tables
 from ingest_spark.operators import classifier, dedup
-from ingest_spark.streaming.pipeline import (
-    _fs_list,
-    _fs_read_text,
-    _fs_rename,
-    _fs_rmtree,
-    _fs_write_text,
-    _is_uri,
-)
 
 # LSH/banding/bloom knobs — module-level so every batch of a corpus
 # uses one consistent signature definition (a mismatch would silently
@@ -125,88 +111,12 @@ _KEYS = {
     "bloom": "pos bigint",
     "novelty": "gk struct<h1: bigint, h2: bigint>",
 }
-_MANIFEST = "_SEGMENTS"
-_STAGING = "_staging-"
 # segments of one size tier merged at once (module docstring)
 _FANOUT = 4
 
 
 def _path(state_dir: str, table: str) -> str:
     return os.path.join(state_dir, table)
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through Hadoop's FileSystem API — resolves the
-    scheme (file://, hdfs://, s3a://...), so replay markers work on
-    object-store state dirs where os.path.exists is always False
-    (r10; same failure class as ADVICE r9 #2 on the signature
-    artifact)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-# ------------------------------------------------------------ segments
-def _manifest(table_path: str) -> dict:
-    """The table's manifest: ``applied`` (last batch id folded in, -1
-    before the seed) and ``segments`` ([name, rows] per live segment)."""
-    text = _fs_read_text(os.path.join(table_path, _MANIFEST))
-    if not text or not text.strip():
-        return {"applied": -1, "segments": []}
-    return json.loads(text)
-
-
-def _publish(table_path: str, applied: int, segments: list) -> None:
-    """The one commit point of a table: replace its manifest
-    atomically. Everything written before it is invisible to readers;
-    everything after it is cleanup."""
-    if not _is_uri(table_path):
-        os.makedirs(table_path, exist_ok=True)
-    _fs_write_text(
-        os.path.join(table_path, _MANIFEST),
-        json.dumps({"applied": applied, "segments": segments}),
-        atomic_replace=True,
-    )
-
-
-def _recover(table_path: str) -> dict:
-    """Delete what a crashed call left behind — staging dirs, segments
-    renamed but never published or already replaced by a compaction,
-    manifest temp files — and return the manifest. Only names this
-    module writes are touched."""
-    m = _manifest(table_path)
-    live = {name for name, _ in m["segments"]}
-    for p in _fs_list(os.path.join(table_path, "*")):
-        name = p.rstrip("/").rsplit("/", 1)[-1]
-        if (
-            (name.startswith("seg-") and name not in live)
-            or name.startswith(_STAGING)
-            or name.startswith(_MANIFEST + ".tmp-")
-        ):
-            _fs_rmtree(p)
-    return m
-
-
-def _write_segment(
-    frame: DataFrame, table_path: str, tag: str
-) -> tuple[str | None, int]:
-    """Write ``frame`` to a staging dir and rename it to ``seg-<tag>``;
-    returns (name, rows), with rows read from an Observation on the
-    write itself (no extra job). A zero-row frame leaves no segment
-    (name None)."""
-    staging = os.path.join(table_path, _STAGING + tag)
-    obs = Observation()
-    frame.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    rows = int(obs.get["rows"])
-    if rows == 0:
-        _fs_rmtree(staging)
-        return None, 0
-    name = f"seg-{tag}"
-    _fs_rename(staging, os.path.join(table_path, name))
-    return name, rows
 
 
 def _tier(rows: int) -> int:
@@ -230,31 +140,24 @@ def _compact(spark: SparkSession, table_path: str, m: dict) -> None:
         frame = spark.read.parquet(
             *[os.path.join(table_path, name) for name, _ in merged]
         )
-        name, rows = _write_segment(frame, table_path, f"{m['applied']:06d}-m{i}")
+        name, rows = state_tables.write_segment(
+            frame, table_path, f"{m['applied']:06d}-m{i}"
+        )
         segments = [s for s in segments if s not in merged] + [[name, rows]]
-        _publish(table_path, m["applied"], segments)
+        state_tables.publish(table_path, m["applied"], segments)
         for old, _ in merged:
-            _fs_rmtree(os.path.join(table_path, old))
+            state_tables.fs_rmtree(os.path.join(table_path, old))
 
 
 def segment_paths(state_dir: str, table: str) -> list[str]:
     """Explicit paths of a state table's live segments."""
-    table_path = _path(state_dir, table)
-    return [os.path.join(table_path, name) for name, _ in _manifest(table_path)["segments"]]
+    return state_tables.live_paths(_path(state_dir, table))
 
 
 def read_state(spark: SparkSession, state_dir: str, table: str) -> DataFrame:
     """The live rows of one state table (``hashes``, ``bands``,
-    ``bloom`` or ``novelty``), read from its manifest's segment paths
-    — the only way to read state: a table root holds nothing but
-    segment dirs, and may hold segments that are not live."""
-    paths = segment_paths(state_dir, table)
-    if not paths:
-        raise FileNotFoundError(
-            f"state table {table!r} under {state_dir!r} has no live segment "
-            f"(not seeded by init_state?)"
-        )
-    return spark.read.parquet(*paths)
+    ``bloom`` or ``novelty``)."""
+    return state_tables.read(spark, _path(state_dir, table))
 
 
 def _read_keys(spark: SparkSession, paths: list[str], table: str) -> DataFrame:
@@ -318,26 +221,22 @@ def _append_segments(
     on concurrent threads; InheritableThread carries the caller's job
     group and local properties into each, so their jobs are
     attributed (and cancellable) like the caller's own."""
-    manifests = {t: _recover(_path(state_dir, t)) for t in _TABLES}
+    manifests = {t: state_tables.recover(_path(state_dir, t)) for t in _TABLES}
     todo = [t for t in _TABLES if manifests[t]["applied"] < batch_id]
     if not todo:
         return
-    stored = {
-        t: [os.path.join(_path(state_dir, t), n) for n, _ in manifests[t]["segments"]]
-        for t in _TABLES
-    }
+    stored = {t: state_tables.live_paths(_path(state_dir, t), manifests[t]) for t in _TABLES}
     frames = _segment_frames(spark, proj, stored)
     errors: list[BaseException] = []
 
     def run(table: str) -> None:
         try:
-            # the active session is per (JVM) thread; the filesystem
-            # helpers resolve URI paths through it
-            spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
             table_path = _path(state_dir, table)
-            name, rows = _write_segment(frames[table], table_path, f"{batch_id:06d}")
+            name, rows = state_tables.write_segment(
+                frames[table], table_path, f"{batch_id:06d}"
+            )
             segments = manifests[table]["segments"] + ([[name, rows]] if name else [])
-            _publish(table_path, batch_id, segments)
+            state_tables.publish(table_path, batch_id, segments)
             _compact(spark, table_path, {"applied": batch_id, "segments": segments})
         except BaseException as exc:  # noqa: BLE001 — re-raised below
             errors.append(exc)
@@ -453,7 +352,7 @@ def _check_signature(spark: SparkSession, state_dir: str) -> None:
     # error, permissions) propagates as itself, because advising
     # "re-seed" on a recoverable fault invites destroying good state
     # (r10 review).
-    if not _fs_exists(spark, path):
+    if not state_tables.fs_exists(path):
         raise RuntimeError(
             f"state dir {state_dir!r} carries no readable signature "
             f"artifact — it was seeded by a pre-widening build or not "
@@ -617,7 +516,7 @@ def ingest_batch(
     # are split on purpose — a PRESENT artifact that fails to load
     # (corrupt, wrong name/version) must stay a loud error, not a
     # silent skip (r10 review).
-    if _fs_exists(spark, _path(state_dir, "quality")):
+    if state_tables.fs_exists(_path(state_dir, "quality")):
         _, weights = artifacts.load_artifact(
             spark, _path(state_dir, "quality"), "quality_logreg"
         )
@@ -658,7 +557,7 @@ def commit_batch(
             f"batch_id must be >= 1 (0 is init_state's seed), got {batch_id}"
         )
     if all(
-        _manifest(_path(state_dir, t))["applied"] >= batch_id for t in _TABLES
+        state_tables.manifest(_path(state_dir, t))["applied"] >= batch_id for t in _TABLES
     ):
         return  # full replay of a committed batch: nothing to evaluate
     kept = new_docs.join(
@@ -704,7 +603,7 @@ def ingest_and_commit(
             f"batch_id must be >= 1 (0 is init_state's seed), got {batch_id}"
         )
     dec_path = _path(state_dir, f"decisions-{batch_id}")
-    if not _fs_exists(spark, os.path.join(dec_path, "_SUCCESS")):
+    if not state_tables.fs_exists(os.path.join(dec_path, "_SUCCESS")):
         ingest_batch(
             spark, new_docs, state_dir, id_col, text_col
         ).write.mode("overwrite").parquet(dec_path)

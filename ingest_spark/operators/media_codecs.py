@@ -1515,25 +1515,6 @@ def _idct_blocks(zz, quant: list[int]):
     return np.clip(np.floor(p + 128.5), 0, 255).astype(np.uint8)
 
 
-def _fdct_quant(samples: list[int], quant: list[int]) -> list[int]:
-    """One level-shifted 8x8 block -> 64 quantized zigzag coefficients
-    (scalar convenience wrapper over the batch kernel)."""
-    import numpy as np
-
-    blocks = np.asarray(samples, dtype=np.float64).reshape(1, 8, 8)
-    return _fdct_quant_blocks(blocks, quant)[0].tolist()
-
-
-def _dequant_idct(zz: list[int], quant: list[int]) -> list[int]:
-    """64 zigzag coefficients -> 8x8 clamped samples (0..255) (scalar
-    convenience wrapper over the batch kernel)."""
-    import numpy as np
-
-    return _idct_blocks(np.asarray(zz, dtype=np.float64).reshape(1, 64), quant)[
-        0
-    ].reshape(64).astype(int).tolist()
-
-
 def _jpeg_huffman_lengths(freqs: dict[int, int]) -> dict[int, int]:
     """Symbol -> canonical code length (<=16). Plain Huffman over the
     observed frequencies plus one phantom symbol (freq 1, sorts last)

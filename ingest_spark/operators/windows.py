@@ -1,5 +1,5 @@
 """Time-window operators: bounds discovery, window enumeration,
-incremental high-watermark fetch planning.
+ingest-time enrichment.
 
 Reference lineage:
 - S2 bounds discovery: two probe API calls with ``limit=1 sort=k
@@ -8,8 +8,8 @@ Reference lineage:
   enumeration with ``sequence() + explode``; the driver-side for-loop
   becomes rows, so planning 40 years of daily windows is instant and
   distributable.
-- T8 processed-date checkpoint (:149-154) -> anti-join of planned
-  windows against a bookkeeping table / high-watermark filter.
+- T8 processed-date checkpoint (:149-154) -> a high-watermark filter
+  pushed into the scan: ``catalog.load_table(..., ts_after=...)``.
 """
 
 from __future__ import annotations
@@ -50,25 +50,6 @@ def enumerate_windows(df: DataFrame, ts_col: str, step: str = "1 day") -> DataFr
             F.sequence("lo", "hi", F.expr(f"interval {step}"))
         ).alias("window_idx", "window_start")
     ).withColumn("window_end", F.col("window_start") + F.expr(f"interval {step}"))
-
-
-def incremental_filter(
-    df: DataFrame, ts_col: str, watermark_df: DataFrame | None, wm_col: str = "high_watermark"
-) -> DataFrame:
-    """T8: keep only rows past the stored high watermark (restart-safe
-    incremental ingest).
-
-    The 1-row bookkeeping table is collected to the driver and applied
-    as a LITERAL predicate: a join-based filter (even broadcast) never
-    reaches the scan, while a literal is pushed into the parquet reader
-    (PushedFilters + partition pruning) — at 100 TB that is the
-    difference between scanning one day and scanning ten years."""
-    if watermark_df is None:
-        return df
-    row = watermark_df.select(F.col(wm_col)).first()
-    if row is None or row[0] is None:  # empty bookkeeping table = first run
-        return df
-    return df.filter(F.col(ts_col) > F.lit(row[0]))
 
 
 def ingested_at(df: DataFrame, col: str = "ingested_at") -> DataFrame:

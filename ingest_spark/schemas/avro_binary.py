@@ -554,14 +554,6 @@ def _promote(v: Any, wkind: str, rkind: str) -> Any:
     raise AssertionError(wkind)
 
 
-def _branch_matches(wt: Any, rt: Any) -> bool:
-    """Can a writer (non-union) type resolve against reader branch rt?"""
-    wk, rk = _kind(wt), _kind(rt)
-    if wk == rk:
-        return _names_compatible(wt, rt, wk)
-    return rk in _PROMOTIONS.get(wk, ())
-
-
 def _names_compatible(wt: Any, rt: Any, kind: str) -> bool:
     """Spec: named types (record/enum/fixed) resolve only when their
     unqualified names match (or the reader lists the writer's name as

@@ -75,21 +75,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True if the spark-avro datasource is on the classpath.
-
-    The pip pyspark distribution ships core Avro jars but not the
-    ``spark-avro`` datasource; serde paths gate on this instead of
-    failing at import time.
-    """
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.avro.functions import to_avro
-
-        df = spark.range(1).select(to_avro(F.struct("id")).alias("b"))
-        df.collect()
-        return True
-    except Exception:
-        return False

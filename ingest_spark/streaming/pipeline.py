@@ -28,13 +28,12 @@ cluster with the package loaded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ingest_spark import state_tables
 from ingest_spark.functions.hashing import content_hash
 
 
@@ -620,428 +619,6 @@ def with_ingest_metrics(
     return df.observe(name, *aggs)
 
 
-# ------------------------------- swap discipline shared helpers (r7)
-# Marker file inside the maintained table dir recording the last
-# applied batch id (and, optionally, the run id it belongs to). The
-# leading underscore makes spark.read.parquet ignore it, and because
-# it is written INTO the staging dir before the swap, the single final
-# install step ships data + marker atomically: there is no window
-# where the data reflects a batch the marker doesn't (ADVICE r6:
-# at-least-once foreachBatch replay must not re-merge an
-# already-merged batch).
-#
-# FILESYSTEM CONTRACT (VERDICT r7 §Next #3; tightened r10): the
-# default RenameSwap strategy performs the install as directory
-# renames on the DRIVER's filesystem view of the table path, and its
-# crash-safety argument requires rename to be atomic — true on POSIX
-# local filesystems, FALSE on S3-style object stores where "rename"
-# is copy+delete. RenameSwap now REFUSES scheme-qualified paths
-# loudly. On an object store pass swap=PointerSwap, which never
-# renames a directory: each batch writes an immutable version dir and
-# flips one small pointer file (locally an atomic os.replace; on a
-# URI path a single overwrite PUT through the Hadoop FileSystem API —
-# as of r10 the pointer, the replay markers, and the version GC all
-# route through Hadoop IO for scheme-qualified paths, so the strategy
-# actually operates on the stores it was designed for).
-_APPLIED_MARKER = "_APPLIED_BATCH"
-
-
-def _is_uri(path: str) -> bool:
-    """True for scheme-qualified paths (s3a://bucket/x, hdfs://nn/x,
-    file:///x) — those route through Hadoop's FileSystem API; bare
-    paths keep plain local IO (and RenameSwap's os.replace atomicity
-    argument)."""
-    return "://" in path
-
-
-def _hadoop_fs(path: str):
-    """(FileSystem, Path) for a scheme-qualified path, resolved via
-    the active session's Hadoop conf. Raises if no session is active —
-    URI-path state maintenance only happens inside Spark jobs."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            f"no active SparkSession to resolve Hadoop filesystem for {path!r}"
-        )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _fs_read_text(path: str) -> str | None:
-    """Read a small text file on any scheme; None when absent (r10:
-    the replay markers and the PointerSwap pointer must be readable on
-    object-store table paths, where driver-local open() is always
-    ENOENT and every batch would re-merge)."""
-    if not _is_uri(path):
-        try:
-            with open(path) as fh:
-                return fh.read()
-        except OSError:
-            return None
-    fs, jpath = _hadoop_fs(path)
-    if not fs.exists(jpath):
-        return None
-    try:
-        stream = fs.open(jpath)
-    except Exception as exc:  # noqa: BLE001 — narrowed to FNF below
-        # exists->open race (ADVICE r10): a file deleted between the
-        # two calls raises java.io.FileNotFoundException through py4j,
-        # which the callers' (OSError, ValueError, ...) handlers do
-        # not catch — genuine absence must behave identically to the
-        # local branch (None). Any OTHER Java IO fault stays loud.
-        jexc = getattr(exc, "java_exception", None)
-        if jexc is not None and "FileNotFoundException" in jexc.getClass().getName():
-            return None
-        raise
-    try:
-        from pyspark.sql import SparkSession
-
-        jvm = SparkSession.getActiveSession()._jvm
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-
-
-def _rename_overwrite(src: str, dst: str) -> bool:
-    """Atomic rename-with-overwrite through Hadoop's FileContext API
-    (``Options.Rename.OVERWRITE``) — the primitive HDFS guarantees
-    atomic and Structured Streaming's own HDFSMetadataLog commits
-    through. Returns False when the scheme has no AbstractFileSystem
-    binding (e.g. s3a without an fs.AbstractFileSystem.s3a.impl —
-    UnsupportedFileSystemException), so the caller can fall back to
-    the single-PUT path that IS atomic on object stores."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    jvm = spark._jvm
-    src_jpath = jvm.org.apache.hadoop.fs.Path(src)
-    dst_jpath = jvm.org.apache.hadoop.fs.Path(dst)
-    try:
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            dst_jpath.toUri(), spark._jsc.hadoopConfiguration()
-        )
-        rename_cls = jvm.org.apache.hadoop.fs.Options.Rename
-        opts = spark.sparkContext._gateway.new_array(rename_cls, 1)
-        opts[0] = rename_cls.OVERWRITE
-        fc.rename(src_jpath, dst_jpath, opts)
-        return True
-    except Exception as exc:  # noqa: BLE001 — narrowed below
-        jexc = getattr(exc, "java_exception", None)
-        if jexc is not None and "UnsupportedFileSystem" in jexc.getClass().getName():
-            return False
-        raise
-
-
-def _fs_write_text(path: str, text: str, atomic_replace: bool = False) -> None:
-    """Write a small text file on any scheme. ``atomic_replace`` is
-    the pointer-flip contract: the destination must transition
-    old-content -> new-content with NO observable torn state.
-
-    - Local paths: os.replace of a temp file (POSIX-atomic).
-    - URI paths (r12, VERDICT r11 §Next #7): WRITE-THEN-RENAME — the
-      text lands in a ``.tmp-<pid>`` sibling first, then flips in via
-      FileContext rename(OVERWRITE), which HDFS guarantees atomic.
-      Pre-r12 this branch was a bare create(overwrite=True), which on
-      HDFS truncates-then-writes: a writer crash between the truncate
-      and the write left a ZERO-LENGTH pointer (ADVICE r10 — the
-      empty-text fallback in PointerSwap.resolve() degrades that to a
-      replayed batch, and stays as defense-in-depth for pointers torn
-      by pre-r12 writers). With write-then-rename the destination is
-      never opened for write at all: a crash before the rename leaves
-      the OLD pointer fully intact, a crash after it leaves the NEW
-      one — proven by test_pointer_flip_crashed_writer_leaves_old_
-      pointer_intact on a file:// FileContext.
-    - Schemes with no FileContext binding (s3a-style object stores)
-      fall back to the single PUT create(overwrite=True), which IS
-      atomic there: the new object appears fully or not at all, and
-      the orphaned temp object is removed best-effort."""
-    if not _is_uri(path):
-        if atomic_replace:
-            tmp = f"{path}.tmp-{os.getpid()}"
-            with open(tmp, "w") as fh:
-                fh.write(text)
-            os.replace(tmp, path)
-        else:
-            with open(path, "w") as fh:
-                fh.write(text)
-        return
-    fs, jpath = _hadoop_fs(path)
-    if atomic_replace:
-        tmp = f"{path}.tmp-{os.getpid()}"
-        _, tmp_jpath = _hadoop_fs(tmp)
-        out = fs.create(tmp_jpath, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        if _rename_overwrite(tmp, path):
-            return
-        # object-store fallback: single PUT is atomic there; drop the tmp
-        try:
-            out = fs.create(jpath, True)
-            try:
-                out.write(bytearray(text.encode("utf-8")))
-            finally:
-                out.close()
-        finally:
-            fs.delete(tmp_jpath, False)
-        return
-    out = fs.create(jpath, True)  # overwrite=True: single-object PUT
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _fs_list(pattern: str) -> list[str]:
-    """Glob on any scheme (local glob.glob or Hadoop globStatus) —
-    PointerSwap's version GC needs it on object stores."""
-    if not _is_uri(pattern):
-        import glob
-
-        return glob.glob(pattern)
-    fs, jpath = _hadoop_fs(pattern)
-    statuses = fs.globStatus(jpath)
-    return [] if statuses is None else [s.getPath().toString() for s in statuses]
-
-
-def _fs_rmtree(path: str) -> None:
-    """Recursive delete on any scheme, ignore-errors semantics."""
-    if not _is_uri(path):
-        import shutil as _sh
-
-        _sh.rmtree(path, ignore_errors=True)
-        return
-    try:
-        fs, jpath = _hadoop_fs(path)
-        fs.delete(jpath, True)
-    except Exception:
-        pass
-
-
-def _fs_rename(src: str, dst: str) -> None:
-    """Rename a file or directory on any scheme; raises when the
-    filesystem reports failure. Atomic on POSIX and HDFS; on an object
-    store it is a copy then a delete, so callers that need atomicity
-    commit through a pointer or manifest flip instead."""
-    if not _is_uri(src):
-        os.rename(src, dst)
-        return
-    fs, src_jpath = _hadoop_fs(src)
-    _, dst_jpath = _hadoop_fs(dst)
-    if not fs.rename(src_jpath, dst_jpath):
-        raise OSError(f"rename {src!r} -> {dst!r} failed")
-
-
-def _recover_swap(table_path: str) -> None:
-    """Crash recovery for the staging->swap discipline (ADVICE r6):
-    the swap is two renames (table -> .old-<id>, staging -> table); a
-    crash between them leaves the table ABSENT with its last good
-    state parked at .old-<id>. Restore the newest dangling .old
-    BEFORE any read, and clear leftover staging/old dirs once the
-    table exists — so a missing table path really means "first batch"
-    and never silently resets accumulated state."""
-    import glob
-    import shutil as _sh
-
-    def _bid(p: str) -> int:
-        try:
-            return int(p.rsplit("-", 1)[1])
-        except ValueError:
-            return -1
-
-    if _is_uri(table_path):
-        # RenameSwap's whole crash-safety argument is rename atomicity
-        # on the DRIVER-LOCAL filesystem view; on a scheme-qualified
-        # path that contract cannot hold (and on S3 rename is
-        # copy+delete). Loud refusal beats silently un-atomic swaps —
-        # PointerSwap is the strategy for those paths (r10 review).
-        raise ValueError(
-            f"RenameSwap requires a driver-local table path, got "
-            f"{table_path!r}; use swap=PointerSwap for object-store/"
-            f"URI paths"
-        )
-    if not os.path.exists(table_path):
-        olds = sorted(glob.glob(table_path + ".old-*"), key=_bid)
-        if olds:
-            os.rename(olds.pop(), table_path)
-            for p in olds:
-                _sh.rmtree(p, ignore_errors=True)
-    if os.path.exists(table_path):
-        for p in glob.glob(table_path + ".staging-*") + glob.glob(
-            table_path + ".old-*"
-        ):
-            _sh.rmtree(p, ignore_errors=True)
-
-
-def _applied_batch(table_path: str, run_id: str | None = None) -> int:
-    """Last batch id merged into the table at ``table_path``; -1 if
-    the table (or marker) does not exist yet.
-
-    ``run_id`` guards the fresh-checkpoint restart (r7 ADVICE): a
-    streaming query restarted with a NEW checkpoint resets batch ids
-    to 0, and comparing raw ids against an existing table's marker
-    would silently skip every batch until the new ids catch up. When
-    the caller passes a run id and the marker records a DIFFERENT
-    one, the marker does not apply (-1 is returned and the batch
-    merges). A marker with no recorded run (written by a run-less
-    maintainer) keeps its id for backward compatibility."""
-    try:
-        text = _fs_read_text(os.path.join(table_path, _APPLIED_MARKER))
-        if text is None:
-            return -1
-        lines = text.split("\n")
-        stored_run = lines[1] if len(lines) > 1 and lines[1] else None
-        if run_id is not None and stored_run is not None and stored_run != run_id:
-            return -1  # marker belongs to another run: merge, don't skip
-        return int(lines[0].strip())
-    except (OSError, ValueError, IndexError):
-        return -1
-
-
-def _mark_applied(staging: str, batch_id: int, run_id: str | None = None) -> None:
-    """Stamp the staging dir with ``batch_id`` (and the owning run id,
-    when known) — must run AFTER the Spark write (mode("overwrite")
-    clears the dir) and BEFORE the swap, so marker and data always
-    travel together."""
-    _fs_write_text(
-        os.path.join(staging, _APPLIED_MARKER),
-        str(batch_id) if run_id is None else f"{batch_id}\n{run_id}",
-    )
-
-
-def _swap_in(table_path: str, staging: str, batch_id: int) -> None:
-    """Install ``staging`` as the new table: park the current table at
-    .old-<id>, rename staging into place, then drop the parked copy.
-    A crash between the two renames is recovered by `_recover_swap`
-    on the next batch (the .old dir still holds the last good
-    state)."""
-    import shutil as _sh
-
-    old = f"{table_path}.old-{batch_id}"
-    if os.path.exists(table_path):
-        os.rename(table_path, old)
-    os.rename(staging, table_path)
-    _sh.rmtree(old, ignore_errors=True)
-
-
-class RenameSwap:
-    """Default swap strategy: staging dir + atomic directory rename
-    (the r7 discipline, unchanged). FILESYSTEM CONTRACT: requires
-    rename-atomic storage under the table path — POSIX local FS or
-    HDFS. NOT safe on S3-style object stores, where directory rename
-    is copy+delete; use PointerSwap there (VERDICT r7 §Next #3)."""
-
-    @staticmethod
-    def recover(table_path: str) -> None:
-        _recover_swap(table_path)
-
-    @staticmethod
-    def resolve(table_path: str) -> str:
-        return table_path
-
-    @staticmethod
-    def staging(table_path: str, batch_id: int, run_id: str | None = None) -> str:
-        # run_id is irrelevant here: the staging dir is never the live
-        # dir (the table path itself is), so a cross-run name reuse
-        # only overwrites an inert leftover
-        return f"{table_path}.staging-{batch_id}"
-
-    @staticmethod
-    def install(table_path: str, staging: str, batch_id: int) -> None:
-        _swap_in(table_path, staging, batch_id)
-
-
-class PointerSwap:
-    """Object-store-safe swap strategy: each batch writes an IMMUTABLE
-    version dir ``<table>.v-<batch_id>`` and then commits it by
-    replacing one small pointer file ``<table>.ptr`` (locally an
-    os.replace; on an object store a single PUT — the only operation
-    whose atomicity the scheme relies on). Readers resolve the pointer
-    to the live version dir, so the table is NEVER absent mid-swap: a
-    crash after the version write but before the pointer flip leaves
-    the previous version live and the dangling dir is simply
-    rewritten when the batch replays. Superseded versions older than
-    the previous one are garbage-collected on install (the previous
-    version is retained one extra batch so in-flight reader plans
-    opened just before a flip still find their files)."""
-
-    PTR = ".ptr"
-
-    @staticmethod
-    def recover(table_path: str) -> None:
-        return  # nothing to repair: an unflipped version is inert
-
-    @staticmethod
-    def resolve(table_path: str) -> str:
-        text = _fs_read_text(table_path + PointerSwap.PTR)
-        # Empty/whitespace pointer text is treated as absent, exactly
-        # like a missing file (ADVICE r10): the single-PUT atomicity
-        # claim holds for object stores, but HDFS create(overwrite)
-        # truncates-then-writes, so a crash mid-flip can leave a
-        # zero-length pointer — resolving that to '' would break every
-        # subsequent read; falling back to the base path keeps the
-        # previous behavior of "no pointer yet".
-        if text is None or not text.strip():
-            return table_path  # no pointer yet (or truncated): first batch
-        return text.strip()
-
-    @staticmethod
-    def staging(table_path: str, batch_id: int, run_id: str | None = None) -> str:
-        # Version dirs must be collision-free ACROSS runs (ADVICE r8):
-        # a fresh-checkpoint restart resets streaming batch ids to 0,
-        # and a name derived from batch_id alone would stage batch 0
-        # into the dir the pointer currently marks LIVE — rewriting
-        # the only good version in place (on an object store, exactly
-        # the non-atomic multi-object update this strategy exists to
-        # avoid), and a crash mid-write would corrupt it. run_id is
-        # hashed (it is usually a checkpoint PATH) into a short token;
-        # run-less callers keep the legacy name but are still covered
-        # by the live-dir guard below.
-        if run_id is not None:
-            import hashlib
-
-            tok = hashlib.sha256(run_id.encode()).hexdigest()[:12]
-            cand = f"{table_path}.v-{tok}-{batch_id}"
-        else:
-            cand = f"{table_path}.v-{batch_id}"
-        if cand == PointerSwap.resolve(table_path):
-            cand += "-r"  # never stage into the live version dir
-        return cand
-
-    @staticmethod
-    def install(table_path: str, staging: str, batch_id: int) -> None:
-        prev = PointerSwap.resolve(table_path)  # live version pre-flip
-        # pointer flip: locally an os.replace of a temp file, on a
-        # scheme-qualified store a single overwrite PUT — both routes
-        # are the one-atomic-operation contract the class docstring
-        # documents (r10: the pointer/GC IO goes through the Hadoop FS
-        # API for URI paths, so this strategy actually WORKS on the
-        # object stores it was designed for, not just on local paths)
-        _fs_write_text(table_path + PointerSwap.PTR, staging, atomic_replace=True)
-        # GC: keep the new version plus the one that was live until
-        # this flip (grace for in-flight reader plans); drop the rest.
-        # URI paths normalize through Hadoop Path.toString() first:
-        # globStatus returns 'file:/x' for an input of 'file:///x',
-        # and a raw string compare would GC the version just installed
-        def _norm(p: str) -> str:
-            if not _is_uri(p):
-                return p
-            from pyspark.sql import SparkSession
-
-            jvm = SparkSession.getActiveSession()._jvm
-            return jvm.org.apache.hadoop.fs.Path(p).toString()
-
-        keep = {_norm(staging), _norm(prev)}
-        for p in _fs_list(table_path + ".v-*"):
-            if p not in keep:
-                _fs_rmtree(p)
-
-
 # -------------------------------------------- incremental rollup (r6)
 def foreach_batch_rollup(
     rollup_path: str,
@@ -1049,62 +626,55 @@ def foreach_batch_rollup(
     sum_cols: list[str],
     min_cols: list[str] | None = None,
     run_id: str | None = None,
-    swap=RenameSwap,
 ):
     """Incremental MATERIALIZED ROLLUP maintenance: per micro-batch,
     aggregate the batch to (keys, partial sums + partial count), merge
-    with the stored rollup by key-wise ADDITION, and atomically
-    replace the store (write to a staging dir, then swap). Because
-    sum/count/min are associative partials, the maintained table
-    equals a full recompute over everything ever streamed — asserted
-    in tests/test_streaming.py — while each batch's cost is
-    O(batch + |rollup|), never O(history). ``min_cols`` carries
-    min-merged columns: with key=gram and min_col=doc_id this IS the
-    incremental first-seen novelty state (SCALING.md §8).
+    with the stored rollup by key-wise ADDITION, and commit the merged
+    table as one `state_tables` segment that replaces the previous
+    one. Because sum/count/min are associative partials, the
+    maintained table equals a full recompute over everything ever
+    streamed — asserted in tests/test_streaming.py — while each
+    batch's cost is O(batch + |rollup|), never O(history).
+    ``min_cols`` carries min-merged columns: with key=gram and
+    min_col=doc_id this IS the incremental first-seen novelty state
+    (SCALING.md §8). Read the table with `state_tables.read`.
 
     This is the streaming half of the lambda-less architecture: the
     same rollup the batch engine would build, kept current by the
     stream (averages derive as sum/count downstream; min/max and any
     other semigroup merge the same way). On a cluster with a table
-    format the staging swap becomes a MERGE; the shape is identical.
+    format the segment replace becomes a MERGE; the shape is
+    identical.
 
     Replay + crash safety (ADVICE r6): foreachBatch is at-least-once,
-    so each applied batch id is recorded in an `_APPLIED_BATCH` marker
-    written INTO the staging dir before the swap — data and marker
-    install in the same rename, and a replayed batch whose id the
-    marker already covers is skipped instead of double-counted. The
-    swap itself is two renames; a crash between them leaves the table
-    absent with its last good state at `.old-<id>`, which
-    `_recover_swap` restores before the missing-path branch can
-    mistake the situation for a first batch and reset history.
+    so the table's manifest records the applied batch id in the same
+    atomic flip that publishes the data, and a replayed batch it
+    already covers is skipped instead of double-counted. A crash
+    before the flip leaves the previous table live.
 
     ``run_id`` names the owning streaming run (pass the checkpoint
     location, or anything stable per checkpoint): a restart with a
     FRESH checkpoint resets streaming batch ids to 0, and without a
-    run id the marker would silently skip every batch until the new
+    run id the manifest would silently skip every batch until the new
     ids exceed the stored one (r7 ADVICE). With a run id recorded in
-    the marker, replays skip only within the same run; a new run's
-    batches always merge. ``swap`` selects the install strategy:
-    RenameSwap (default, rename-atomic FS required — POSIX/HDFS) or
-    PointerSwap (object-store-safe pointer-file commit)."""
+    the manifest, replays skip only within the same run; a new run's
+    batches always merge."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        swap.recover(rollup_path)
-        if _applied_batch(swap.resolve(rollup_path), run_id) >= batch_id:
+        m = state_tables.recover(rollup_path)
+        if state_tables.applied_id(m, run_id) >= batch_id:
             return  # at-least-once replay of an already-merged batch
-        spark = batch_df.sparkSession
         mins = min_cols or []
-        partial = batch_df.groupBy(*key_cols).agg(
+        merged = batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).alias("n_rows"),
             *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
             *[F.min(c).alias(f"min_{c}") for c in mins],
         )
-        try:
-            current = spark.read.parquet(swap.resolve(rollup_path))
+        paths = state_tables.live_paths(rollup_path, m)
+        if paths:
             merged = (
-                current.unionByName(partial)
+                batch_df.sparkSession.read.parquet(*paths)
+                .unionByName(merged)
                 .groupBy(*key_cols)
                 .agg(
                     F.sum("n_rows").alias("n_rows"),
@@ -1112,12 +682,7 @@ def foreach_batch_rollup(
                     *[F.min(f"min_{c}").alias(f"min_{c}") for c in mins],
                 )
             )
-        except AnalysisException:  # first batch: rollup not created yet
-            merged = partial
-        staging = swap.staging(rollup_path, batch_id, run_id)
-        merged.write.mode("overwrite").parquet(staging)
-        _mark_applied(staging, batch_id, run_id)
-        swap.install(rollup_path, staging, batch_id)
+        state_tables.replace(rollup_path, m, merged, batch_id, run_id)
 
     return apply
 
@@ -1130,66 +695,57 @@ def foreach_batch_scd2(
     time_col: str,
     tiebreak_col: str,
     run_id: str | None = None,
-    swap=RenameSwap,
 ):
     """Incremental SCD2 (type-2 slowly-changing-dimension) table
     maintenance: per micro-batch, rebuild the validity intervals of
     ONLY the entities present in the batch — read back their current
     rows, union the new state events, re-derive
     [valid_from, valid_to) / is_current with one per-entity window,
-    and swap atomically (staging + rename, the foreach_batch_rollup
-    discipline). Entities untouched by the batch are carried over
-    unchanged, so per-batch COMPUTE is O(touched entities' history),
-    never an all-history recompute; the staging swap itself rewrites
-    the table (parquet has no in-place update — on a table format the
-    swap becomes a MERGE touching only affected rows).
+    and commit the result as one `state_tables` segment replacing the
+    previous one (the foreach_batch_rollup discipline). Entities
+    untouched by the batch are carried over unchanged, so per-batch
+    COMPUTE is O(touched entities' history), never an all-history
+    recompute; the segment write itself rewrites the table (parquet
+    has no in-place update — on a table format the commit becomes a
+    MERGE on key_col touching only affected rows). Read the table
+    with `state_tables.read`.
 
     Equivalence contract (asserted in tests): after any sequence of
     batches, the maintained table EQUALS the batch
     `scd2_user_state_history` recompute over everything streamed —
     including out-of-order arrivals WITHIN an entity, because the
-    affected entity's full history re-sorts on every touch. On a
-    table format the swap becomes MERGE on key_col.
+    affected entity's full history re-sorts on every touch.
 
-    Crash + replay safety (ADVICE r6): same discipline as
-    foreach_batch_rollup — `_recover_swap` restores a dangling
-    `.old-<id>` before the missing-table path can mistake a
-    mid-swap crash for a first batch (which would silently drop every
-    entity absent from that batch), and the `_APPLIED_BATCH` marker
-    skips at-least-once replays (the merge itself is also replay-safe
-    via dropDuplicates, so the skip is an optimization here, not a
-    correctness requirement). ``run_id`` / ``swap``: same contract as
-    foreach_batch_rollup — run-scoped replay skip and pluggable
-    install strategy (RenameSwap needs rename-atomic FS; PointerSwap
-    is object-store-safe)."""
+    Crash + replay safety and ``run_id``: same contract as
+    foreach_batch_rollup (the merge itself is also replay-safe via
+    dropDuplicates, so the replay skip is an optimization here, not a
+    correctness requirement)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
-        from pyspark.errors import AnalysisException
 
-        swap.recover(table_path)
-        if _applied_batch(swap.resolve(table_path), run_id) >= batch_id:
+        m = state_tables.recover(table_path)
+        if state_tables.applied_id(m, run_id) >= batch_id:
             return  # at-least-once replay of an already-applied batch
-        spark = batch_df.sparkSession
-        new_events = batch_df.select(
+        merged = batch_df.select(
             key_col,
             F.col(state_col).alias("state"),
             F.col(time_col).alias("valid_from"),
             F.col(tiebreak_col).alias("__tb"),
         )
-        keys = new_events.select(key_col).distinct()
-        try:
-            current = spark.read.parquet(swap.resolve(table_path))
+        untouched = None
+        paths = state_tables.live_paths(table_path, m)
+        if paths:
+            current = batch_df.sparkSession.read.parquet(*paths)
+            keys = merged.select(key_col).distinct()
             untouched = current.join(keys, key_col, "left_anti")
-            affected_hist = current.join(keys, key_col, "semi").select(
-                key_col, "state", "valid_from", "__tb"
+            merged = (
+                current.join(keys, key_col, "semi")
+                .select(key_col, "state", "valid_from", "__tb")
+                .unionByName(merged)
             )
-            merged = affected_hist.unionByName(new_events)
-        except AnalysisException:  # first batch
-            untouched = None
-            merged = new_events
         w = Window.partitionBy(key_col).orderBy("valid_from", "__tb")
-        rebuilt = merged.dropDuplicates([key_col, "valid_from", "__tb"]).select(
+        out = merged.dropDuplicates([key_col, "valid_from", "__tb"]).select(
             key_col,
             "state",
             "valid_from",
@@ -1197,14 +753,8 @@ def foreach_batch_scd2(
             F.lead("valid_from").over(w).alias("valid_to"),
             F.lead("valid_from").over(w).isNull().alias("is_current"),
         )
-        out = (
-            rebuilt
-            if untouched is None
-            else untouched.unionByName(rebuilt)
-        )
-        staging = swap.staging(table_path, batch_id, run_id)
-        out.write.mode("overwrite").parquet(staging)
-        _mark_applied(staging, batch_id, run_id)
-        swap.install(table_path, staging, batch_id)
+        if untouched is not None:
+            out = untouched.unionByName(out)
+        state_tables.replace(table_path, m, out, batch_id, run_id)
 
     return apply

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-from ingest_spark import incremental
+from ingest_spark import incremental, state_tables
 from ingest_spark.operators import dedup
 
 
@@ -135,7 +135,7 @@ def _assert_only_live_visible(state):
     state."""
     for t in incremental._TABLES:
         table = os.path.join(state, t)
-        live = {name for name, _ in incremental._manifest(table)["segments"]}
+        live = {name for name, _ in state_tables.manifest(table)["segments"]}
         visible = {n for n in os.listdir(table) if not n.startswith(("_", "."))}
         assert visible == live, (t, visible, live)
 
@@ -168,7 +168,7 @@ def test_walkthrough_matches_from_scratch_across_batches(spark, tmp_path):
 
 def test_commit_replay_is_noop_and_state_bounded(spark, tmp_path):
     """Replaying a committed batch_id must not grow any state table
-    (the maintainer's marker skips it); state sizes match their
+    (each table manifest skips it); state sizes match their
     documented bounds."""
     state = str(tmp_path / "state")
     incremental.init_state(spark, _corpus(spark, SEED), state)
@@ -202,19 +202,19 @@ def test_ingest_and_commit_resumes_mid_commit_crash(spark, tmp_path, monkeypatch
     # the kill: novelty's writer dies after writing and renaming its
     # segment but before publishing it, while the other three tables
     # publish theirs
-    real = incremental._publish
+    real = state_tables.publish
 
     def dying_publish(table_path, applied, segments):
         if applied == 1 and table_path.endswith("novelty"):
             raise RuntimeError("killed before publish")
         real(table_path, applied, segments)
 
-    monkeypatch.setattr(incremental, "_publish", dying_publish)
+    monkeypatch.setattr(state_tables, "publish", dying_publish)
     with pytest.raises(RuntimeError, match="killed"):
         incremental.ingest_and_commit(spark, b1, state, batch_id=1)
-    monkeypatch.setattr(incremental, "_publish", real)
+    monkeypatch.setattr(state_tables, "publish", real)
     applied = {
-        t: incremental._manifest(os.path.join(state, t))["applied"]
+        t: state_tables.manifest(os.path.join(state, t))["applied"]
         for t in incremental._TABLES
     }
     assert applied == {"hashes": 1, "bands": 1, "bloom": 1, "novelty": 0}
@@ -321,14 +321,14 @@ def test_streaming_ingest_sink_kill_resume(spark, tmp_path):
     assert _state_sets(state_s) == before
 
     # at-least-once replay straight into the sink (streaming id 1 ->
-    # ingest id 2, already committed): marker-guarded no-op
+    # ingest id 2, already committed): manifest-guarded no-op
     incremental.streaming_ingest_sink(state_s)(_corpus(spark, BATCH2), 1)
     assert _state_sets(state_s) == before
 
 
 def test_batch_id_zero_rejected(spark, tmp_path):
     """r7 ADVICE: init_state owns batch 0 — a commit under id 0 would
-    be silently skipped by the seed's marker, so it must raise."""
+    be silently skipped by the seed manifests, so it must raise."""
     import pytest
 
     state = str(tmp_path / "state")
@@ -382,7 +382,7 @@ def test_leftovers_of_crashed_writes_are_ignored_and_recovered(spark, tmp_path):
     want = _sizes(spark, state)
     for t in incremental._TABLES:
         table = os.path.join(state, t)
-        (live,) = incremental._manifest(table)["segments"]
+        (live,) = state_tables.manifest(table)["segments"]
         seg = os.path.join(table, live[0])
         # a crashed segment write and a crashed compaction's output
         shutil.copytree(seg, os.path.join(table, "_staging-000001"))
@@ -390,7 +390,7 @@ def test_leftovers_of_crashed_writes_are_ignored_and_recovered(spark, tmp_path):
         # a published compaction whose input was never deleted: the
         # manifest names only the merged copy
         shutil.copytree(seg, os.path.join(table, "seg-000000-m0"))
-        incremental._publish(table, 0, [["seg-000000-m0", live[1]]])
+        state_tables.publish(table, 0, [["seg-000000-m0", live[1]]])
     assert _sizes(spark, state) == want
     d1 = incremental.ingest_batch(spark, _corpus(spark, BATCH1), state)
     assert _decisions_dict(d1) == _from_scratch(spark, SEED, BATCH1)
@@ -423,7 +423,7 @@ def test_compacted_state_scores_identically(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(incremental, "_FANOUT", 2)
     for t in incremental._TABLES:
         table = os.path.join(compacted, t)
-        incremental._compact(spark, table, incremental._manifest(table))
+        incremental._compact(spark, table, state_tables.manifest(table))
     n_segs = {t: len(incremental.segment_paths(compacted, t)) for t in incremental._TABLES}
     assert n_segs["hashes"] == n_segs["bands"] == 1, n_segs
     assert scored(compacted) == before
@@ -444,9 +444,9 @@ def test_exact_dup_flagged_when_bloom_bits_repeat(spark, tmp_path):
     state = str(tmp_path / "state")
     incremental.init_state(spark, _corpus(spark, SEED), state)
     table = os.path.join(state, "bloom")
-    (seg,) = incremental._manifest(table)["segments"]
+    (seg,) = state_tables.manifest(table)["segments"]
     shutil.copytree(os.path.join(table, seg[0]), os.path.join(table, "seg-000000-copy"))
-    incremental._publish(table, 0, [seg, ["seg-000000-copy", seg[1]]])
+    state_tables.publish(table, 0, [seg, ["seg-000000-copy", seg[1]]])
     bits = incremental.read_state(spark, state, "bloom")
     assert bits.count() == 2 * bits.distinct().count()
     got = _decisions_dict(incremental.ingest_batch(spark, _corpus(spark, BATCH1), state))

@@ -628,6 +628,7 @@ def test_rollup_batch_split_invariance(spark, tmp_path_factory, rows, cuts):
     """foreach_batch_rollup (count/sum/min): any micro-batch slicing
     of the same rows yields the identical maintained rollup as one
     batch groupBy over everything."""
+    from ingest_spark import state_tables
     from ingest_spark.streaming.pipeline import foreach_batch_rollup
 
     tmp = str(tmp_path_factory.mktemp("rollup_fuzz"))
@@ -637,7 +638,7 @@ def test_rollup_batch_split_invariance(spark, tmp_path_factory, rows, cuts):
         apply(spark.createDataFrame(chunk, "k string, v long"), bid)
     got = {
         r.k: (r.n_rows, r.sum_v, r.min_v)
-        for r in spark.read.parquet(path).collect()
+        for r in state_tables.read(spark, path).collect()
     }
     want = {}
     for k, v in rows:
@@ -667,6 +668,7 @@ def test_scd2_batch_split_invariance(spark, tmp_path_factory, events, cuts):
 
     from pyspark.sql import Window as W
 
+    from ingest_spark import state_tables
     from ingest_spark.streaming.pipeline import foreach_batch_scd2
 
     base = datetime(2024, 1, 1)
@@ -682,7 +684,7 @@ def test_scd2_batch_split_invariance(spark, tmp_path_factory, events, cuts):
         apply(spark.createDataFrame(chunk, schema), bid)
     got = {
         (r.user_id, r.valid_from, r.state, r.valid_to, r.is_current)
-        for r in spark.read.parquet(path).collect()
+        for r in state_tables.read(spark, path).collect()
     }
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     want = {

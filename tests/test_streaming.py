@@ -3,9 +3,11 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ingest_spark import state_tables
 from ingest_spark.streaming.pipeline import (
     foreach_batch_upsert,
     ingest_transform,
@@ -568,27 +570,25 @@ def test_incremental_rollup_equals_full_recompute(spark, tmp_path):
     batch2 = [("a", 4.0), ("c", 7.0), ("b", -1.0), ("b", 0.5)]
     write_batch(batch1)
     run_stream()
-    mid = {r.k: (r.n_rows, r.sum_v) for r in spark.read.parquet(rollup).collect()}
-    assert mid == {"a": (2, 3.0), "b": (1, 10.0)}
+    assert _read_rollup(spark, rollup) == {"a": (2, 3.0), "b": (1, 10.0)}
 
     write_batch(batch2)
     run_stream()  # resumes from checkpoint: only batch2 is new
-    got = {r.k: (r.n_rows, r.sum_v) for r in spark.read.parquet(rollup).collect()}
-    assert got == {"a": (3, 7.0), "b": (3, 9.5), "c": (1, 7.0)}
+    assert _read_rollup(spark, rollup) == {"a": (3, 7.0), "b": (3, 9.5), "c": (1, 7.0)}
 
 
 def _read_rollup(spark, rollup):
     return {
-        r.k: (r.n_rows, r.sum_v) for r in spark.read.parquet(rollup).collect()
+        r.k: (r.n_rows, r.sum_v) for r in state_tables.read(spark, rollup).collect()
     }
 
 
 def test_rollup_replay_of_applied_batch_is_skipped(spark, tmp_path):
     """ADVICE r6 (medium): foreachBatch is at-least-once — a crash
     after the swap but before the streaming checkpoint commits
-    re-runs the batch against the already-merged rollup. The
-    _APPLIED_BATCH marker (installed in the same rename as the data)
-    must make that replay a no-op, not a double count."""
+    re-runs the batch against the already-merged rollup. The applied
+    id in the table's manifest (published in the same flip as the
+    data) must make that replay a no-op, not a double count."""
     from ingest_spark.streaming.pipeline import foreach_batch_rollup
 
     rollup = str(tmp_path / "rollup")
@@ -601,69 +601,6 @@ def test_rollup_replay_of_applied_batch_is_skipped(spark, tmp_path):
     assert _read_rollup(spark, rollup) == want
     apply(b1, 1)  # at-least-once replay of the committed batch
     assert _read_rollup(spark, rollup) == want
-
-
-def test_rollup_recovers_mid_swap_crash(spark, tmp_path):
-    """ADVICE r6: a crash BETWEEN the two swap renames leaves nothing
-    at rollup_path and the last good state parked at .old-<id>. The
-    next batch must restore that state and merge into it — NOT take
-    the first-batch path and silently reset history to its own
-    partial."""
-    from ingest_spark.streaming.pipeline import foreach_batch_rollup
-
-    rollup = str(tmp_path / "rollup")
-    apply = foreach_batch_rollup(rollup, ["k"], ["v"])
-    apply(spark.createDataFrame([("a", 1.0)], "k string, v double"), 0)
-    apply(spark.createDataFrame([("a", 2.0)], "k string, v double"), 1)
-    # simulate the mid-swap crash during a batch-2 attempt: the table
-    # was renamed away but the staging dir never made it into place
-    os.rename(rollup, rollup + ".old-2")
-    apply(spark.createDataFrame([("b", 7.0)], "k string, v double"), 2)
-    assert _read_rollup(spark, rollup) == {"a": (2, 3.0), "b": (1, 7.0)}
-    # recovery + swap leave no stray staging/old dirs behind
-    strays = [
-        p
-        for p in os.listdir(tmp_path)
-        if p.startswith("rollup.old-") or p.startswith("rollup.staging-")
-    ]
-    assert strays == []
-
-
-def test_scd2_recovers_mid_swap_crash(spark, tmp_path):
-    """ADVICE r6: foreach_batch_scd2's missing-table path assumed
-    first batch — after a mid-swap crash that would have dropped every
-    entity absent from the next batch. The recovery path must carry
-    untouched entities across the crash."""
-    from datetime import datetime as DT
-
-    from ingest_spark.streaming.pipeline import foreach_batch_scd2
-
-    table = str(tmp_path / "scd2")
-    schema = "user_id long, event_type string, ts timestamp, event_id long"
-    apply = foreach_batch_scd2(table, "user_id", "event_type", "ts", "event_id")
-    apply(
-        spark.createDataFrame(
-            [
-                (1, "signup", DT(2024, 1, 1, 10), 1),
-                (2, "signup", DT(2024, 1, 1, 12), 2),
-            ],
-            schema,
-        ),
-        0,
-    )
-    os.rename(table, table + ".old-1")  # crash mid-swap on a batch-1 attempt
-    apply(
-        spark.createDataFrame([(1, "purchase", DT(2024, 1, 2, 9), 3)], schema),
-        1,
-    )
-    rows = spark.read.parquet(table)
-    # user 2 was untouched by batch 1 and must survive the crash
-    assert rows.filter("user_id = 2").count() == 1
-    u1 = sorted(
-        (r.valid_from, r.state, r.is_current)
-        for r in rows.filter("user_id = 1").collect()
-    )
-    assert [(s, c) for _, s, c in u1] == [("signup", False), ("purchase", True)]
 
 
 def test_watermark_bounds_state_late_rows_best_effort(spark, tmp_path):
@@ -799,7 +736,7 @@ def test_incremental_scd2_equals_batch_recompute(spark, tmp_path):
 
     got = {
         (r.user_id, r.valid_from, r.state, r.valid_to, r.is_current)
-        for r in spark.read.parquet(table).collect()
+        for r in state_tables.read(spark, table).collect()
     }
     # batch recompute over everything streamed
     all_events = spark.createDataFrame(b1 + b2, schema)
@@ -866,7 +803,7 @@ def test_incremental_novelty_state_via_min_rollup(spark, tmp_path):
     write_batch(b2)
     run_stream()
 
-    got = {r.gram: r.min_doc_id for r in spark.read.parquet(state).collect()}
+    got = {r.gram: r.min_doc_id for r in state_tables.read(spark, state).collect()}
     all_docs = spark.createDataFrame(b1 + b2, schema)
     want = {
         r.gram: r.first
@@ -919,7 +856,7 @@ def test_sessionize_drain_mode_terminates(spark, tmp_path):
 
 def test_rollup_fresh_checkpoint_new_run_merges(spark, tmp_path):
     """r7 ADVICE: restarting with a FRESH checkpoint resets streaming
-    batch ids to 0; with run-scoped markers those batches must MERGE
+    batch ids to 0; with run-scoped manifests those batches must MERGE
     into the existing rollup (pre-r7 behavior), while replays within
     one run are still skipped."""
     from ingest_spark.streaming.pipeline import foreach_batch_rollup
@@ -942,107 +879,36 @@ def test_rollup_fresh_checkpoint_new_run_merges(spark, tmp_path):
     assert _read_rollup(spark, rollup) == {"a": (2, 5.0), "b": (1, 7.0)}
 
 
-def _read_pointer_rollup(spark, rollup):
-    from ingest_spark.streaming.pipeline import PointerSwap
-
-    return {
-        r.k: (r.n_rows, r.sum_v)
-        for r in spark.read.parquet(PointerSwap.resolve(rollup)).collect()
-    }
-
-
-def test_pointer_swap_rollup_and_crash_before_flip(spark, tmp_path):
-    """VERDICT r7 §Next #3: the object-store-safe strategy. The table
-    is committed by flipping one small pointer file, so (a) normal
-    maintenance matches RenameSwap semantics, (b) a crash AFTER the
-    version write but BEFORE the pointer flip leaves the previous
-    version live (the table is never absent — the non-atomic-rename
-    failure mode cannot occur), and (c) the replayed batch completes
-    the install."""
-    import os
-
-    from ingest_spark.streaming.pipeline import PointerSwap, foreach_batch_rollup
-
-    rollup = str(tmp_path / "rollup")
-    apply = foreach_batch_rollup(rollup, ["k"], ["v"], swap=PointerSwap)
-    apply(spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double"), 0)
-    apply(spark.createDataFrame([("a", 4.0)], "k string, v double"), 1)
-    want = {"a": (2, 5.0), "b": (1, 2.0)}
-    assert _read_pointer_rollup(spark, rollup) == want
-    # replay skip still works through the pointer
-    apply(spark.createDataFrame([("a", 4.0)], "k string, v double"), 1)
-    assert _read_pointer_rollup(spark, rollup) == want
-
-    # simulate the crash: batch 2's version dir gets written (junk
-    # stand-in) but the pointer never flips
-    dangling = PointerSwap.staging(rollup, 2)
-    os.makedirs(dangling, exist_ok=True)
-    with open(os.path.join(dangling, "junk"), "w") as fh:
-        fh.write("incomplete")
-    assert PointerSwap.resolve(rollup).endswith(".v-1")  # batch 1 still live
-    assert _read_pointer_rollup(spark, rollup) == want  # old state live
-
-    # the streaming replay of batch 2 rewrites the version and flips
-    apply(spark.createDataFrame([("c", 9.0)], "k string, v double"), 2)
-    assert _read_pointer_rollup(spark, rollup) == {
-        "a": (2, 5.0), "b": (1, 2.0), "c": (1, 9.0),
-    }
-    assert not os.path.exists(os.path.join(PointerSwap.resolve(rollup), "junk"))
-    # GC keeps current + one grace version, nothing older
-    versions = sorted(p for p in os.listdir(tmp_path) if p.startswith("rollup.v-"))
-    assert versions == ["rollup.v-1", "rollup.v-2"]
-
-
-def test_pointer_swap_torn_empty_pointer_resolves_to_base(spark, tmp_path):
-    """ADVICE r10: on HDFS create(overwrite=True) truncates then
-    writes, so a crash mid-flip can leave a ZERO-LENGTH pointer file.
-    resolve() must treat empty/whitespace pointer text as absent (fall
-    back to the base path) instead of returning '' — which would break
-    every subsequent read of the table."""
-    from ingest_spark.streaming.pipeline import PointerSwap
-
-    rollup = str(tmp_path / "rollup")
-    with open(rollup + PointerSwap.PTR, "w") as fh:
-        fh.write("")  # torn flip: pointer exists but is empty
-    assert PointerSwap.resolve(rollup) == rollup
-    with open(rollup + PointerSwap.PTR, "w") as fh:
-        fh.write("  \n")  # whitespace-only is equally torn
-    assert PointerSwap.resolve(rollup) == rollup
-
-
 def test_pointer_flip_crashed_writer_leaves_old_pointer_intact(
     spark, tmp_path, monkeypatch
 ):
-    """VERDICT r11 §Next #7: the URI-path pointer flip is now
-    WRITE-THEN-RENAME (temp sibling + FileContext rename(OVERWRITE) —
-    the primitive HDFS guarantees atomic). Simulate the crashed
-    writer: the process dies AFTER the temp write but BEFORE the
-    rename. The live pointer must be FULLY INTACT — not zero-length,
-    not partially written — because the destination is never opened
-    for write. Under the pre-r12 create(overwrite=True) flip this
-    exact crash window truncated the pointer (HDFS truncates, then
-    writes), the defect ADVICE r10 documented. file:// paths route
-    through the same Hadoop FileContext code path as hdfs://."""
+    """VERDICT r11 §Next #7: the URI-path flip of a small text file
+    (a table's manifest) is WRITE-THEN-RENAME (temp sibling +
+    FileContext rename(OVERWRITE) — the primitive HDFS guarantees
+    atomic). Simulate the crashed writer: the process dies AFTER the
+    temp write but BEFORE the rename. The live file must be FULLY
+    INTACT — not zero-length, not partially written — because the
+    destination is never opened for write (HDFS create(overwrite=True)
+    truncates, then writes). file:// paths route through the same
+    Hadoop FileContext code path as hdfs://."""
     import pytest
 
-    from ingest_spark.streaming import pipeline as pl
-
-    ptr = "file://" + str(tmp_path / "rollup.ptr")  # URI -> Hadoop IO
-    pl._fs_write_text(ptr, "rollup.v-7", atomic_replace=True)
-    assert pl._fs_read_text(ptr) == "rollup.v-7"
+    ptr = "file://" + str(tmp_path / "_SEGMENTS")  # URI -> Hadoop IO
+    state_tables._fs_write_text(ptr, "v-7")
+    assert state_tables._fs_read_text(ptr) == "v-7"
 
     def killed_before_rename(src, dst):
         raise RuntimeError("writer killed between temp write and rename")
 
-    monkeypatch.setattr(pl, "_rename_overwrite", killed_before_rename)
+    monkeypatch.setattr(state_tables, "_rename_overwrite", killed_before_rename)
     with pytest.raises(RuntimeError):
-        pl._fs_write_text(ptr, "rollup.v-8", atomic_replace=True)
-    # old pointer untouched: the crash left a .tmp orphan, never a torn dst
-    assert pl._fs_read_text(ptr) == "rollup.v-7"
+        state_tables._fs_write_text(ptr, "v-8")
+    # old text untouched: the crash left a .tmp orphan, never a torn dst
+    assert state_tables._fs_read_text(ptr) == "v-7"
     monkeypatch.undo()
     # the replayed batch (fresh writer) completes the flip
-    pl._fs_write_text(ptr, "rollup.v-8", atomic_replace=True)
-    assert pl._fs_read_text(ptr) == "rollup.v-8"
+    state_tables._fs_write_text(ptr, "v-8")
+    assert state_tables._fs_read_text(ptr) == "v-8"
 
 
 def test_pointer_flip_object_store_fallback_single_put(
@@ -1052,14 +918,10 @@ def test_pointer_flip_object_store_fallback_single_put(
     raise UnsupportedFileSystemException) fall back to the single
     create(overwrite=True) PUT — atomic on object stores by object
     semantics — and must clean up the orphaned temp object."""
-    import os
-
-    from ingest_spark.streaming import pipeline as pl
-
-    ptr = "file://" + str(tmp_path / "rollup.ptr")
-    monkeypatch.setattr(pl, "_rename_overwrite", lambda src, dst: False)
-    pl._fs_write_text(ptr, "rollup.v-3", atomic_replace=True)
-    assert pl._fs_read_text(ptr) == "rollup.v-3"
+    ptr = "file://" + str(tmp_path / "_SEGMENTS")
+    monkeypatch.setattr(state_tables, "_rename_overwrite", lambda src, dst: False)
+    state_tables._fs_write_text(ptr, "v-3")
+    assert state_tables._fs_read_text(ptr) == "v-3"
     leftovers = [p for p in os.listdir(tmp_path) if ".tmp-" in p]
     assert leftovers == [], leftovers
 
@@ -1070,7 +932,7 @@ def test_fs_read_text_exists_open_race_returns_none(monkeypatch):
     Py4JJavaError(FileNotFoundException) that crashed the micro-batch,
     while the local branch maps absence to None. Genuine absence must
     behave identically on both branches; other Java faults stay loud."""
-    from ingest_spark.streaming import pipeline as P
+    P = state_tables
 
     class _JClass:
         def __init__(self, name):
@@ -1114,119 +976,152 @@ def test_fs_read_text_exists_open_race_returns_none(monkeypatch):
         P._fs_read_text("file:///nope/raced.txt")
 
 
-def test_pointer_swap_scd2(spark, tmp_path):
-    """foreach_batch_scd2 through PointerSwap equals the same batches
-    through the default strategy."""
-    from ingest_spark.streaming.pipeline import (
-        PointerSwap,
-        foreach_batch_scd2,
+def test_fs_helpers_work_from_a_plain_thread(spark, tmp_path):
+    """(< 1 s) The Hadoop-path helpers resolve the JVM through the
+    process-wide SparkContext, not the per-thread active session: a
+    plain thread, which never set a session, reads, replaces and lists
+    files on a file:// path."""
+    import threading
+
+    path = "file://" + str(tmp_path / "_SEGMENTS")
+    out, errors = {}, []
+
+    def work():
+        try:
+            state_tables._fs_write_text(path, "v-1")
+            out["exists"] = state_tables.fs_exists(path)
+            out["text"] = state_tables._fs_read_text(path)
+            out["listed"] = state_tables._fs_list("file://" + str(tmp_path) + "/*")
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    th = threading.Thread(target=work)
+    th.start()
+    th.join(60)
+    assert not th.is_alive()
+    assert errors == []
+    assert out["exists"] and out["text"] == "v-1"
+    assert [p.rsplit("/", 1)[-1] for p in out["listed"]] == ["_SEGMENTS"]
+
+
+# three batches per maintainer; the scd2 one reaches user 1 out of order
+_PROTOCOL_BATCHES = {
+    "rollup": [[("a", 1.0), ("b", 2.0)], [("a", 4.0), ("c", 0.5)], [("b", 8.0)]],
+    "scd2": [
+        [(1, "signup", 10, 1), (2, "signup", 15, 2)],
+        [(1, "active", 5, 3), (3, "signup", 12, 4)],
+        [(2, "churned", 30, 5)],
+    ],
+}
+
+
+def _protocol_want(kind, batches):
+    """The table after ``batches``, recomputed in Python."""
+    rows = [r for b in batches for r in b]
+    if kind == "rollup":
+        out = {}
+        for k, v in rows:
+            n, total = out.get(k, (0, 0.0))
+            out[k] = (n + 1, total + v)
+        return out
+    out = set()
+    for user in {r[0] for r in rows}:
+        hist = sorted((ts, eid, st) for u, st, ts, eid in rows if u == user)
+        for i, (ts, _, st) in enumerate(hist):
+            nxt = hist[i + 1][0] if i + 1 < len(hist) else None
+            out.add((user, ts, st, nxt, nxt is None))
+    return out
+
+
+def _protocol_rows(kind, frame):
+    if kind == "rollup":
+        return {r.k: (r.n_rows, r.sum_v) for r in frame.collect()}
+    return {
+        (r.user_id, r.valid_from, r.state, r.valid_to, r.is_current)
+        for r in frame.collect()
+    }
+
+
+@pytest.mark.parametrize("scheme", ["bare", "file"])
+@pytest.mark.parametrize("kind", ["rollup", "scd2"])
+def test_state_table_commit_protocol(spark, tmp_path, monkeypatch, kind, scheme):
+    """(~7 s each) The crash/replay properties of a table maintained by
+    foreach_batch_rollup / foreach_batch_scd2, on a bare path (local
+    IO) and on a file:// path (Hadoop IO): a torn (empty) manifest
+    reads as no table; a fresh run whose ids restart at 0 merges and
+    never stages into or overwrites the live segment; a replay within
+    a run is skipped; a crash after the segment write and before the
+    publish leaves the previous state live; the replaced segment
+    survives until the next call, so a reader plan opened before a
+    flip still reads; no ``_staging-*`` is left once a call returns."""
+    from ingest_spark.streaming.pipeline import foreach_batch_rollup, foreach_batch_scd2
+
+    local = str(tmp_path / kind)
+    path = local if scheme == "bare" else "file://" + local
+    schema = (
+        "k string, v double"
+        if kind == "rollup"
+        else "user_id long, event_type string, ts long, event_id long"
     )
+    batches = [spark.createDataFrame(rows, schema) for rows in _PROTOCOL_BATCHES[kind]]
 
-    rows0 = [(1, "signup", 10, 1), (1, "active", 20, 2), (2, "signup", 15, 3)]
-    rows1 = [(1, "churned", 30, 4), (3, "signup", 12, 5)]
-    schema = "user_id long, event_type string, ts long, event_id long"
-    results = {}
-    for name, swap in (("rename", None), ("pointer", PointerSwap)):
-        table = str(tmp_path / f"scd2_{name}")
-        kwargs = {} if swap is None else {"swap": swap}
-        apply = foreach_batch_scd2(table, "user_id", "event_type", "ts", "event_id", **kwargs)
-        apply(spark.createDataFrame(rows0, schema), 0)
-        apply(spark.createDataFrame(rows1, schema), 1)
-        path = table if swap is None else PointerSwap.resolve(table)
-        results[name] = {
-            (r.user_id, r.valid_from): (r.state, r.valid_to, r.is_current)
-            for r in spark.read.parquet(path).collect()
-        }
-    assert results["rename"] == results["pointer"]
+    def maintainer(run):
+        if kind == "rollup":
+            return foreach_batch_rollup(path, ["k"], ["v"], run_id=run)
+        return foreach_batch_scd2(path, "user_id", "event_type", "ts", "event_id", run_id=run)
 
+    def state():
+        return _protocol_rows(kind, state_tables.read(spark, path))
 
-def test_pointer_swap_fresh_checkpoint_restart_never_stages_into_live(
-    spark, tmp_path
-):
-    """ADVICE r8 (medium): a fresh-checkpoint restart resets streaming
-    batch ids to 0 while the pointer still marks run A's `.v-...-0` (or
-    legacy `.v-0`) dir live. Version names derived from batch_id alone
-    made run B stage its merge INTO the live dir — an in-place rewrite
-    of the only good version (a crash mid-write corrupts it; on an
-    object store it is the non-atomic multi-object update PointerSwap
-    exists to avoid). Version names are now run-scoped, and a live-dir
-    guard covers run-less callers."""
-    import os
+    def want(n):
+        return _protocol_want(kind, _PROTOCOL_BATCHES[kind][:n])
 
-    from ingest_spark.streaming.pipeline import PointerSwap, foreach_batch_rollup
+    def live():
+        (seg,) = state_tables.manifest(path)["segments"]
+        return seg[0]
 
-    rollup = str(tmp_path / "rollup")
-    # run A: fresh checkpoint, ids from 0
-    apply_a = foreach_batch_rollup(
-        rollup, ["k"], ["v"], run_id="ckpt-A", swap=PointerSwap
-    )
-    apply_a(spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double"), 0)
-    live_a = PointerSwap.resolve(rollup)
+    def on_disk():
+        names = os.listdir(local)
+        assert not [n for n in names if n.startswith("_staging-")]
+        return {n for n in names if n.startswith("seg-")}
 
-    # run B: NEW checkpoint, ids reset to 0 — must not touch run A's dir
-    staging_b = PointerSwap.staging(rollup, 0, "ckpt-B")
-    assert staging_b != live_a
-    apply_b = foreach_batch_rollup(
-        rollup, ["k"], ["v"], run_id="ckpt-B", swap=PointerSwap
-    )
-    apply_b(spark.createDataFrame([("a", 4.0)], "k string, v double"), 0)
-    # run B's batch MERGED (replay skip is run-scoped, so batch 0 of a
-    # new run is applied) and the flip installed a different dir
-    assert _read_pointer_rollup(spark, rollup) == {"a": (2, 5.0), "b": (1, 2.0)}
-    assert PointerSwap.resolve(rollup) != live_a
+    def snapshot(name):
+        seg = os.path.join(local, name)
+        return {f: open(os.path.join(seg, f), "rb").read() for f in os.listdir(seg)}
 
-    # legacy run-less callers: the live-dir guard still refuses to
-    # hand out the pointed-at dir as a staging target (covers direct
-    # staging() users and marker-less states; within
-    # foreach_batch_rollup the run-less marker skips same-id replays,
-    # the separately-documented r7 pitfall)
-    legacy = str(tmp_path / "legacy")
-    apply0 = foreach_batch_rollup(legacy, ["k"], ["v"], swap=PointerSwap)
-    apply0(spark.createDataFrame([("x", 1.0)], "k string, v double"), 0)
-    live = PointerSwap.resolve(legacy)
-    assert live.endswith(".v-0")
-    assert PointerSwap.staging(legacy, 0) != live
+    os.makedirs(local)
+    open(os.path.join(local, "_SEGMENTS"), "w").close()  # torn manifest
+    run_a, run_b = maintainer("ckpt-A"), maintainer("ckpt-B")
+    run_a(batches[0], 0)
+    first = live()
+    first_bytes = snapshot(first)
 
+    # fresh checkpoint: run B restarts at id 0 and merges beside the
+    # live segment of run A's batch 0, which stays byte-identical
+    run_b(batches[1], 0)
+    assert live() != first
+    assert on_disk() == {first, live()}
+    assert snapshot(first) == first_bytes
 
-def test_pointer_swap_on_uri_path_hadoop_io(spark, tmp_path):
-    """r10: PointerSwap's pointer, replay markers, and version GC go
-    through the Hadoop FileSystem API for scheme-qualified paths —
-    exercised here with file:// URIs, where driver-local open() would
-    be ENOENT for every probe. Before r10 this exact scenario silently
-    re-merged every replayed batch (markers unreadable) and resolve()
-    always returned the bare table path; the local-path test above
-    keeps covering the os.replace branch. RenameSwap refuses URI paths
-    loudly (its rename-atomicity contract is local-FS-only)."""
-    import pytest as _pytest
+    published = state_tables.manifest(path)
+    run_b(batches[1], 0)  # at-least-once replay within run B
+    assert state_tables.manifest(path) == published
 
-    from ingest_spark.streaming.pipeline import (
-        PointerSwap,
-        RenameSwap,
-        foreach_batch_rollup,
-    )
+    inflight = state_tables.read(spark, path)  # checked below: want(2)
+    before = live()
+    real = state_tables.publish
 
-    rollup = "file://" + str(tmp_path / "rollup_uri")
-    apply = foreach_batch_rollup(rollup, ["k"], ["v"], swap=PointerSwap)
-    apply(spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double"), 0)
-    apply(spark.createDataFrame([("a", 4.0)], "k string, v double"), 1)
-    want = {"a": (2, 5.0), "b": (1, 2.0)}
-    assert _read_pointer_rollup(spark, rollup) == want
-    # replay of an already-applied batch must SKIP (marker readable
-    # through Hadoop IO), not re-merge to a=(3, 9.0)
-    apply(spark.createDataFrame([("a", 4.0)], "k string, v double"), 1)
-    assert _read_pointer_rollup(spark, rollup) == want
-    # pointer resolves to the v-1 version dir, not the bare path
-    assert ".v-" in PointerSwap.resolve(rollup)
-    # GC through globStatus kept current + grace only, and did NOT
-    # delete the live version (URI normalization in the keep-set)
-    import os as _os
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before publish")
 
-    versions = sorted(
-        p for p in _os.listdir(tmp_path) if p.startswith("rollup_uri.v-")
-    )
-    assert versions == ["rollup_uri.v-0", "rollup_uri.v-1"]
+    monkeypatch.setattr(state_tables, "publish", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_b(batches[2], 1)
+    monkeypatch.setattr(state_tables, "publish", real)
+    assert state_tables.manifest(path) == published
+    assert len(on_disk() - {before}) == 1  # written, never published
 
-    with _pytest.raises(ValueError, match="driver-local"):
-        foreach_batch_rollup(
-            "s3a://bucket/rollup", ["k"], ["v"], swap=RenameSwap
-        )(spark.createDataFrame([("a", 1.0)], "k string, v double"), 0)
+    run_b(batches[2], 1)  # the restarted query replays the batch
+    assert state() == want(3)
+    assert on_disk() == {before, live()}
+    assert _protocol_rows(kind, inflight) == want(2)
